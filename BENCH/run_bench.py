@@ -129,9 +129,7 @@ def run_level(
         else {"broadcast_ranks": True}
     )
     t0 = time.time()
-    res = pagerank(
-        edges, tol=tol, max_iter=max_iter, num_partitions=partitions, check_every=4, **kw
-    )
+    res = pagerank(edges, tol=tol, max_iter=max_iter, num_partitions=partitions, **kw)
     res.ranks.count()
     total_wall = time.time() - t0
     walls = [m["wall_sec"] for m in res.metrics]
@@ -152,7 +150,7 @@ def run_level(
         "per_iter_sec": walls,
         "shuffle_read_bytes": sum(m.get("shuffle_read_bytes", 0) for m in res.metrics),
         "shuffle_write_bytes": sum(m.get("shuffle_write_bytes", 0) for m in res.metrics),
-        "delta_l1": [m["delta_l1"] for m in res.metrics if "delta_l1" in m],
+        "delta_l1": [m["delta_l1"] for m in res.metrics],
     }
     spark.stop()
     return out

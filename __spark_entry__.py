@@ -372,7 +372,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .union(e.select(F.col("dst").alias("id")))
             .distinct()
         )
-        res = pagerank(e, nodes=nodes, tol=0.0, max_iter=3, check_every=3)
+        res = pagerank(e, nodes=nodes, tol=0.0, max_iter=3)
         return res.ranks.select("id", F.round("rank", 6).alias("rank"))
 
     def g44_rank_agreement(spark, sf):
@@ -389,7 +389,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .union(e.select(F.col("dst").alias("id")))
             .distinct()
         )
-        res = pagerank(e, nodes=nodes, tol=0.0, max_iter=3, check_every=3)
+        res = pagerank(e, nodes=nodes, tol=0.0, max_iter=3)
         pr = res.ranks.select("id", F.round("rank", 6).alias("rank"))
         od = e.groupBy(F.col("src").alias("id")).agg(
             F.count(F.lit(1)).cast("long").alias("deg")
@@ -409,7 +409,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .union(e.select(F.col("dst").alias("id")))
             .distinct()
         )
-        res = pagerank(e, nodes=nodes, tol=0.0, max_iter=3, check_every=3)
+        res = pagerank(e, nodes=nodes, tol=0.0, max_iter=3)
         pr = res.ranks.select("id", F.round("rank", 6).alias("rank"))
         return score_gini(pr, key="id", val="rank")
 
@@ -430,7 +430,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .union(e.select(F.col("dst").alias("id")))
             .distinct()
         )
-        res = pagerank(e, nodes=nodes, tol=0.0, max_iter=3, check_every=3, weight_col="wt")
+        res = pagerank(e, nodes=nodes, tol=0.0, max_iter=3, weight_col="wt")
         return res.ranks.select("id", F.round("rank", 6).alias("rank"))
 
     def i2b_ppr_3iter(spark, sf):
@@ -447,9 +447,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         pers = spark.createDataFrame(
             [(0, 5.0), (7, 3.0), (13, 2.0)], "id long, weight double"
         )
-        res = pagerank(
-            e, nodes=nodes, tol=0.0, max_iter=3, check_every=3, personalization=pers
-        )
+        res = pagerank(e, nodes=nodes, tol=0.0, max_iter=3, personalization=pers)
         return res.ranks.select("id", F.round("rank", 6).alias("rank"))
 
     def g6b_hits_2iter(spark, sf):
@@ -1404,7 +1402,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .distinct()
         )
         seeds = spark.createDataFrame([(2,), (3,), (5,)], "id long")
-        sm = spam_mass(e, seeds, nodes=nodes, tol=0.0, max_iter=3, check_every=3)
+        sm = spam_mass(e, seeds, nodes=nodes, tol=0.0, max_iter=3)
         return sm.select(
             "id",
             F.round("rank", 6).alias("rank"),
@@ -1425,9 +1423,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .union(e.select(F.col("dst").alias("id")))
             .distinct()
         )
-        top = inverse_pagerank_seeds(
-            e, k=25, nodes=nodes, tol=0.0, max_iter=3, check_every=3
-        )
+        top = inverse_pagerank_seeds(e, k=25, nodes=nodes, tol=0.0, max_iter=3)
         return top.select("id", F.round("rank", 6).alias("rank"))
 
     def i1e_mc_pagerank_3step(spark, sf):

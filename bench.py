@@ -185,6 +185,12 @@ def main():
             "n_test": auc_row["n_test"],
             "n_pos": auc_row["n_pos"],
         }
+        # AUC is undefined (NULL) when no held-out positive, or no negative,
+        # is among the candidates: bank the reason instead of a bare null
+        if not auc_row["n_pos"]:
+            extra["linkpred_auc"].update(auc=None, reason="no held-out positive among the candidates")
+        elif auc_row["auc"] is None:
+            extra["linkpred_auc"]["reason"] = "candidates are all positive or all negative"
 
     edges.unpersist()
     extra["trials"] = trials

@@ -12,16 +12,20 @@ Semantics are pinned to the reference recurrence (pagerank_gpu.cu:137-191):
 Physical design (Spark-first, NOT a CSR port):
 - `adj(src, dst, w=1/outdeg)` replaces the CSR transition matrix; built once,
   hash-partitioned on the join key and persisted (the reference's
-  precompute-1/outdeg-outside-the-loop, cu:122-129).
+  precompute-1/outdeg-outside-the-loop, cu:122-129). It also holds one self
+  row per node (w NULL, plus the node's dangling flag and teleport weight),
+  so the gather's sum by dst also carries each node's old rank and flags.
 - the SpMV gather (cu:197-217) = adj ⋈ ranks on src, then sum by dst. With
   `salt_buckets=S` the aggregation is an explicit two-stage skew split:
   partial sums on (dst, pmod(hash(src),S)) then final sum on dst — hub
   vertices with huge in-degree never serialize into one reducer.
 - dangling is a rank-1 scalar correction (cu:102,125: dangling rows never
   enter the matrix), NOT materialized edges.
-- convergence + next iteration's dangling mass + Σrank are ONE multi-aggregate
-  pass over r_new ⋈ r_old (the reference makes three separate sweeps,
-  cu:149-174).
+- convergence + next iteration's dangling mass + Σrank are observed
+  (DataFrame.observe) on the job that materializes r_new, which carries the
+  old rank beside the new one; the reference makes three separate sweeps
+  (cu:149-174). The observed dangling mass enters the next update as a
+  literal, so a round runs no aggregate job of its own.
 - lineage is truncated every `checkpoint_every` iterations: either
   iteration-stamped Parquet snapshots + a JSON manifest with per-iteration
   metrics (resumable: a rerun picks up from the last snapshot), or
@@ -35,7 +39,7 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 
 @dataclass
@@ -49,22 +53,36 @@ class PageRankResult:
     metrics: list[dict] = field(default_factory=list)  # per-iteration
 
 
-def _shuffle_totals(spark) -> dict:
-    """Best-effort cumulative shuffle bytes from the UI REST API (local and
-    cluster mode both expose it); {} if unavailable."""
-    try:
-        import urllib.request
+def _shuffle_totals(spark) -> dict | None:
+    """Cumulative shuffle bytes from the UI REST API (local and cluster mode
+    both expose it); None when the UI is disabled or does not answer."""
+    import urllib.request
 
-        ui = spark.sparkContext.uiWebUrl
-        app_id = spark.sparkContext.applicationId
+    ui = spark.sparkContext.uiWebUrl
+    if not ui:
+        return None
+    app_id = spark.sparkContext.applicationId
+    try:
         with urllib.request.urlopen(f"{ui}/api/v1/applications/{app_id}/stages", timeout=2) as r:
             stages = json.loads(r.read())
-        return {
-            "shuffle_read_bytes": sum(s.get("shuffleReadBytes", 0) for s in stages),
-            "shuffle_write_bytes": sum(s.get("shuffleWriteBytes", 0) for s in stages),
-        }
-    except Exception:
-        return {}
+    except (OSError, ValueError):
+        return None
+    return {
+        "shuffle_read_bytes": sum(s.get("shuffleReadBytes", 0) for s in stages),
+        "shuffle_write_bytes": sum(s.get("shuffleWriteBytes", 0) for s in stages),
+    }
+
+
+def _dangling_mass():
+    return F.sum(F.when(F.col("is_dangling"), F.col("rank")).otherwise(0.0)).alias("dm")
+
+
+def _checkpoint_observed(df: DataFrame, *aggs) -> tuple[DataFrame, dict]:
+    """localCheckpoint df's (id, rank) and return it with the aggregates
+    `aggs` over df, observed on the checkpoint job itself (no extra job)."""
+    obs = Observation()
+    state = df.observe(obs, *aggs).select("id", "rank").localCheckpoint(eager=True)
+    return state, obs.get
 
 
 from engine.operators._checkpoint import load_manifest as _load_manifest
@@ -105,7 +123,6 @@ def pagerank(
     num_partitions: int | None = None,
     resume: bool = True,
     broadcast_ranks: bool | None = None,
-    check_every: int = 1,
     personalization: DataFrame | None = None,
     weight_col: str | None = None,
     init_ranks: DataFrame | None = None,
@@ -128,14 +145,6 @@ def pagerank(
     skew. None (default) → auto: broadcast iff n ≤ BROADCAST_NODE_LIMIT.
     Both strategies compute the identical recurrence (float sum order may
     differ at the last ulp).
-
-    check_every: cadence of the convergence-stats job (consecutive-iteration
-    L1 delta, reference criterion unchanged — just evaluated every k-th
-    iteration, so a run may do up to k-1 iterations past convergence). The
-    dangling mass itself never needs a driver round-trip: it is folded into
-    the update as a lazy broadcast 1-row aggregate of the current vector.
-    With k > 1, per-iteration metrics carry delta/Σrank only on check
-    iterations.
 
     weight_col: optional edge-weight column on `edges` (weighted PageRank —
     anchor-text/link-frequency weighting): each edge contributes
@@ -206,25 +215,6 @@ def pagerank(
         contrib_edges = edges.filter(wc > 0)
         out_deg = contrib_edges.groupBy("src").agg(F.sum(wc).alias("deg"))
         edge_w = wc / F.col("deg")
-    adj = (
-        contrib_edges.join(out_deg, "src")
-        .select("src", "dst", edge_w.alias("w"))
-        # broadcast gather: partition by dst so join→partial-agg→final-agg is
-        # one exchange-free stage; shuffle gather: partition by src so only
-        # the small rank vector shuffles into the join
-        .repartition(P, "dst" if broadcast_ranks else "src")
-        # one-time clustering by the per-iteration probe/join key, paid at
-        # build and amortized over every iteration: broadcast path — rows
-        # with equal src are adjacent, so the hashed-relation probe hits the
-        # same entry ~avg-outdeg times in a row (cache-resident) instead of
-        # a random DRAM-latency miss per edge; shuffle path — the cached
-        # relation carries outputOrdering(src), so a sort-merge gather join
-        # reuses it instead of re-sorting the edge side every iteration
-        .sortWithinPartitions("src")
-        .persist()
-    )
-    num_edges = adj.count()  # materialize
-
     node_info = nodes.select("id").join(
         out_deg.select(F.col("src").alias("id"), "deg"), "id", "left"
     ).select("id", F.col("deg").isNull().alias("is_dangling"))
@@ -251,13 +241,42 @@ def pagerank(
         )
     node_info = node_info.repartition(P, "id").persist()
     n = node_info.count()
+    attrs = node_info.columns[1:]  # is_dangling[, pw]
+
+    # adj carries one self row per node (src = dst = id, w NULL) with the
+    # node attributes, so a round's single gather aggregate by dst also
+    # yields every node's old rank and attributes: one join with r per round
+    # and no node_info join
+    edge_rows = contrib_edges.join(out_deg, "src").select("src", "dst", edge_w.alias("w"))
+    self_rows = node_info.select(
+        F.col("id").alias("src"),
+        F.col("id").alias("dst"),
+        F.lit(None).cast("double").alias("w"),
+        *attrs,
+    )
+    adj = (
+        edge_rows.unionByName(self_rows, allowMissingColumns=True)
+        # broadcast gather: partition by dst so join→partial-agg→final-agg is
+        # one exchange-free stage; shuffle gather: partition by src so only
+        # the small rank vector shuffles into the join
+        .repartition(P, "dst" if broadcast_ranks else "src")
+        # one-time clustering by the per-iteration probe/join key, paid at
+        # build and amortized over every iteration: broadcast path — rows
+        # with equal src are adjacent, so the hashed-relation probe hits the
+        # same entry ~avg-outdeg times in a row (cache-resident) instead of
+        # a random DRAM-latency miss per edge; shuffle path — the cached
+        # relation carries outputOrdering(src), so a sort-merge gather join
+        # reuses it instead of re-sorting the edge side every iteration
+        .sortWithinPartitions("src")
+        .persist()
+    )
+    num_edges = adj.count() - n  # materialize
     teleport = (1.0 - alpha) / n
 
     # ---- init / resume ----
-    # r carries (id, rank, is_dangling): the dangling flag rides along so the
-    # per-iteration dangling-mass aggregate is a filter+sum over r itself —
-    # no join, no driver round-trip (the reference's separate dangling sweep,
-    # cu:149-154, folded into the dataflow).
+    # r, the state, is (id, rank); the node attributes stay in node_info and
+    # adj's self rows. Every materialization of r observes the dangling mass
+    # the next round needs, so no round runs an aggregate job for it.
     start_iter = 0
     metrics: list[dict] = []
     r = None
@@ -268,13 +287,7 @@ def pagerank(
             start_iter = man["completed_iter"] + 1
             metrics = man["iterations"]
             snap = os.path.join(checkpoint_dir, f"iter={man['completed_iter']}")
-            r = (
-                spark.read.parquet(snap)
-                .join(node_info, "id")
-                .select("id", "rank", "is_dangling")
-                .repartition(P, "id")
-                .localCheckpoint(eager=True)
-            )
+            r = spark.read.parquet(snap).join(node_info, "id")
     if r is None and init_ranks is not None:
         # warm start (incremental re-rank over a snapshot delta): seed from a
         # prior run's vector. Ids absent from init_ranks (pages new in this
@@ -294,63 +307,69 @@ def pagerank(
         r = (
             seeded.join(F.broadcast(tot))
             .select("id", (F.col("rank") / F.col("_t")).alias("rank"), "is_dangling")
-            .repartition(P, "id")
-            .localCheckpoint(eager=True)
         )
     if r is None:
         init_rank = F.col("pw") if personalization is not None else F.lit(1.0 / n)
-        r = node_info.select(
-            "id", init_rank.alias("rank"), "is_dangling"
-        ).localCheckpoint(eager=True)
+        r = node_info.select("id", init_rank.alias("rank"), "is_dangling")
+    r, seed_stats = _checkpoint_observed(r, _dangling_mass())
+    dm = seed_stats["dm"]
 
     converged = False
     delta = float("inf")
-    dangling_mass = None  # informational (manifest/metrics); not on the critical path
+    total = None  # Σrank of r, observed by the last round
     it = start_iter - 1
     base_shuffle = _shuffle_totals(spark)
 
-    for it in range(start_iter, max_iter):
-        t0 = time.time()
-        ranks_src = r.select(F.col("id").alias("src"), "rank")
-        # lazy scalar: Σ rank over dangling nodes of the CURRENT vector,
-        # broadcast as a 1-row frame into the update projection
-        dm_df = r.agg(
-            F.coalesce(
-                F.sum(F.when(F.col("is_dangling"), F.col("rank"))), F.lit(0.0)
-            ).alias("_dm")
+    # Each round is one dataflow materialized by one localCheckpoint, and the
+    # convergence stats (L1 delta, next round's dangling mass, Σrank) are
+    # observed on that same job; the reference makes three separate sweeps
+    # (cu:149-174). The old rank and the node attributes come out of the
+    # same gather aggregate, from adj's self rows, so r is joined once: the
+    # broadcast gather costs two jobs per round (the rank broadcast and the
+    # checkpoint), the shuffle gather three (r to the gather join, the dst
+    # shuffle, the checkpoint; four when salted). Joining r a second time by
+    # id for the old rank would cost a third job on the broadcast gather:
+    # localCheckpoint output scans as UnknownPartitioning(0) (Spark 4.1.2),
+    # so r would be re-shuffled by id every round. It would also square r's
+    # Catalyst size estimate each round, which the checkpoint carries into
+    # the next round's plan, until planning stalls on BigInteger products.
+    def combine(df, *keys):
+        # each id group holds exactly one self row, so max() picks its values
+        return df.groupBy(*keys).agg(
+            F.sum("gathered").alias("gathered"),
+            *[F.max(c).alias(c) for c in ("old", *attrs)],
         )
 
-        if broadcast_ranks:
-            # exchange-free gather: broadcast-hash-join the rank vector into
-            # the dst-partitioned cached adjacency; the groupBy(dst) partial
-            # and final aggregates are satisfied by adj's existing hash
-            # partitioning, so the whole SpMV is ONE stage, no shuffle files
-            gathered = (
-                adj.join(F.broadcast(ranks_src), "src")
-                .groupBy("dst")
-                .agg(F.sum(F.col("rank") * F.col("w")).alias("gathered"))
-            )
-        elif salt_buckets and salt_buckets > 1:
+    for it in range(start_iter, max_iter):
+        t0 = time.time()
+        # broadcast gather: broadcast-hash-join the rank vector into the
+        # dst-partitioned cached adjacency; the groupBy(dst) partial and
+        # final aggregates are satisfied by adj's existing hash partitioning,
+        # so the whole round is ONE stage, no shuffle files. Shuffle gather:
+        # r shuffles by src into the src-partitioned adjacency, then the
+        # contributions shuffle by dst.
+        rows = adj.join(
+            F.broadcast(r) if broadcast_ranks else r, F.col("src") == F.col("id")
+        ).select(
+            "src",
+            F.col("dst").alias("id"),
+            (F.col("rank") * F.col("w")).alias("gathered"),
+            F.when(F.col("w").isNull(), F.col("rank")).alias("old"),
+            *attrs,
+        )
+
+        if salt_buckets and salt_buckets > 1 and not broadcast_ranks:
             # explicit skew split: partial agg on (dst, salt(src)) bounds any
             # single reduce task to ~in_deg/S rows for hub destinations
-            partial = (
-                adj.join(ranks_src, "src")
-                .groupBy("dst", F.pmod(F.hash("src"), F.lit(salt_buckets)).alias("_salt"))
-                .agg(F.sum(F.col("rank") * F.col("w")).alias("psum"))
-            )
-            gathered = partial.groupBy("dst").agg(F.sum("psum").alias("gathered"))
-        else:
-            gathered = (
-                adj.join(ranks_src, "src")
-                .groupBy("dst")
-                .agg(F.sum(F.col("rank") * F.col("w")).alias("gathered"))
-            )
+            rows = combine(rows, "id", F.pmod(F.hash("src"), F.lit(salt_buckets)))
+        # a group without a self row is a dst outside the node universe
+        step = combine(rows, "id").filter(F.col("old").isNotNull())
 
         if personalization is not None:
             # PPR: dangling mass and teleport both follow the p vector
             update_expr = (
                 F.lit(alpha)
-                * (F.coalesce(F.col("gathered"), F.lit(0.0)) + F.col("_dm") * F.col("pw"))
+                * (F.coalesce(F.col("gathered"), F.lit(0.0)) + F.lit(dm) * F.col("pw"))
                 + F.lit(1.0 - alpha) * F.col("pw")
             )
         else:
@@ -358,48 +377,30 @@ def pagerank(
                 F.lit(alpha)
                 * (
                     F.coalesce(F.col("gathered"), F.lit(0.0))
-                    + F.col("_dm") / F.lit(float(n))
+                    + F.lit(dm) / F.lit(float(n))
                 )
                 + F.lit(teleport)
             )
-        r_new = (
-            node_info.join(gathered.withColumnRenamed("dst", "id"), "id", "left")
-            .crossJoin(F.broadcast(dm_df))
-            .select("id", update_expr.alias("rank"), "is_dangling")
-        )
+        step = step.select("id", "is_dangling", "old", update_expr.alias("rank"))
         # truncate lineage EVERY iteration: without this the logical plan
         # grows linearly and Catalyst re-analysis becomes the per-iteration
         # bottleneck (driver-side, superlinear). localCheckpoint materializes
         # r_new to executor block storage and replaces the plan with a
         # LogicalRDD — the double-buffer swap of pagerank_gpu.cu:175/307.
-        r_new = r_new.localCheckpoint(eager=True)
-
-        m = {"iter": it}
-        check = (
-            check_every <= 1
-            or (it - start_iter) % check_every == check_every - 1
-            or it == max_iter - 1
+        r_new, stats = _checkpoint_observed(
+            step,
+            F.sum(F.abs(F.col("rank") - F.col("old"))).alias("delta"),
+            _dangling_mass(),
+            F.sum("rank").alias("total"),
         )
-        if check:
-            # one multi-aggregate pass: L1 delta (consecutive iterations,
-            # reference criterion cu:169-180) + dangling mass + Σrank
-            stats = (
-                r_new.join(r.select("id", F.col("rank").alias("old")), "id")
-                .agg(
-                    F.sum(F.abs(F.col("rank") - F.col("old"))).alias("delta"),
-                    F.sum(
-                        F.when(F.col("is_dangling"), F.col("rank")).otherwise(0.0)
-                    ).alias("dm"),
-                    F.sum("rank").alias("total"),
-                )
-                .collect()[0]
-            )
-            delta = float(stats["delta"])
-            dangling_mass = float(stats["dm"])
-            m["delta_l1"] = delta
-            m["dangling_mass"] = dangling_mass
-            m["sum_rank"] = float(stats["total"])
-        m["wall_sec"] = round(time.time() - t0, 4)
+        delta, dm, total = float(stats["delta"]), float(stats["dm"]), float(stats["total"])
+        m = {
+            "iter": it,
+            "delta_l1": delta,
+            "dangling_mass": dm,
+            "sum_rank": total,
+            "wall_sec": round(time.time() - t0, 4),
+        }
         metrics.append(m)
 
         r.unpersist()
@@ -412,17 +413,15 @@ def pagerank(
         last_round = delta < tol or it == max_iter - 1
         if last_round or it % checkpoint_every == checkpoint_every - 1:
             cur_shuffle = _shuffle_totals(spark)
-            if cur_shuffle and base_shuffle:
-                m["shuffle_read_bytes"] = (
-                    cur_shuffle["shuffle_read_bytes"] - base_shuffle["shuffle_read_bytes"]
-                )
-                m["shuffle_write_bytes"] = (
-                    cur_shuffle["shuffle_write_bytes"] - base_shuffle["shuffle_write_bytes"]
-                )
-                base_shuffle = cur_shuffle
+            if cur_shuffle is None or base_shuffle is None:
+                m["shuffle_stats"] = "unavailable"
+            else:
+                for k in ("shuffle_read_bytes", "shuffle_write_bytes"):
+                    m[k] = cur_shuffle[k] - base_shuffle[k]
+            base_shuffle = cur_shuffle
         if checkpoint_dir and (it % checkpoint_every == checkpoint_every - 1 or last_round):
             snap = _snapshot_state(
-                r.select("id", "rank"),
+                r,
                 checkpoint_dir,
                 it,
                 {
@@ -431,23 +430,19 @@ def pagerank(
                     "m": num_edges,
                     "alpha": alpha,
                     "tol": tol,
-                    "dangling_mass": dangling_mass,
+                    "dangling_mass": dm,
                     "iterations": metrics,
                 },
             )
-            r = (
-                spark.read.parquet(snap)
-                .join(node_info, "id")
-                .select("id", "rank", "is_dangling")
-                .repartition(P, "id")
-                .localCheckpoint(eager=True)
-            )
+            # the reloaded ranks are bit-identical, so dm still holds
+            r = spark.read.parquet(snap).localCheckpoint(eager=True)
         if delta < tol:
             converged = True
             break
 
     # final normalization (cu:183-189)
-    total = r.agg(F.sum("rank")).collect()[0][0]
+    if total is None:
+        total = r.agg(F.sum("rank")).collect()[0][0]
     ranks = r.select("id", (F.col("rank") / F.lit(total)).alias("rank"))
 
     adj.unpersist()

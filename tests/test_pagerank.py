@@ -146,6 +146,109 @@ def test_iteration_metrics_recorded(spark):
         assert abs(m["sum_rank"] - 1.0) < 1e-6
 
 
+# the 4-node graph reconstructed for the reference's backend/output.txt
+EDGES_4 = [(0, 1), (0, 2), (1, 2), (2, 3), (2, 0), (3, 0)]
+
+
+def _random_edges(seed, n=200, m=700):
+    rng = random.Random(seed)
+    return [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
+
+
+def _replay_round_stats(edges, n, rounds, alpha=0.85):
+    """Per-round (L1 delta, dangling mass, Σrank) of the reference recurrence,
+    each taken over the vector the round produced."""
+    src = np.array([u for u, _ in edges])
+    dst = np.array([v for _, v in edges])
+    outdeg = np.bincount(src, minlength=n)
+    dangling = outdeg == 0
+    r = np.full(n, 1.0 / n)
+    out = []
+    for _ in range(rounds):
+        gathered = np.zeros(n)
+        np.add.at(gathered, dst, r[src] / outdeg[src])
+        r_new = alpha * (gathered + r[dangling].sum() / n) + (1.0 - alpha) / n
+        out.append((np.abs(r_new - r).sum(), r_new[dangling].sum(), r_new.sum()))
+        r = r_new
+    return out
+
+
+@pytest.mark.parametrize("graph", ["toy4", "random200"])
+def test_observed_round_stats_match_numpy_replay(spark, graph):
+    """The stats observed on each round's checkpoint job equal a NumPy replay
+    of the recurrence, round by round."""
+    edges, n = (EDGES_4, 4) if graph == "toy4" else (_random_edges(11), 200)
+    rounds = 8
+    res = pagerank(
+        _edges_df(spark, edges), nodes=spark.range(n), tol=0.0, max_iter=rounds
+    )
+    want = _replay_round_stats(edges, n, rounds)
+    assert [m["iter"] for m in res.metrics] == list(range(rounds))
+    for m, (delta, dm, total) in zip(res.metrics, want):
+        assert abs(m["delta_l1"] - delta) < 1e-12
+        assert abs(m["dangling_mass"] - dm) < 1e-12
+        assert abs(m["sum_rank"] - total) < 1e-12
+
+
+def test_personalized_resume_equals_uninterrupted(spark, tmp_path):
+    """A personalized run resumed from a Parquet snapshot continues the same
+    recurrence: the teleport weights and the dangling mass survive the
+    reload."""
+    edges = _random_edges(29)
+    df = _edges_df(spark, edges)
+    nodes = spark.range(200)
+    pers = spark.createDataFrame([(3, 5.0), (10, 3.0), (42, 2.0)], "id long, weight double")
+    kw = dict(nodes=nodes, tol=0.0, personalization=pers)
+    full = pagerank(df, max_iter=9, **kw)
+
+    ck = str(tmp_path / "ck")
+    pagerank(df, max_iter=5, checkpoint_dir=ck, checkpoint_every=2, **kw)
+    resumed = pagerank(df, max_iter=9, checkpoint_dir=ck, checkpoint_every=2, **kw)
+    assert resumed.iterations == full.iterations == 9
+    assert np.allclose(_ranks_array(resumed, 200), _ranks_array(full, 200), atol=1e-12, rtol=0)
+    for a, b in zip(resumed.metrics, full.metrics):
+        assert a["iter"] == b["iter"]
+        for k in ("delta_l1", "dangling_mass", "sum_rank"):
+            assert abs(a[k] - b[k]) < 1e-12
+
+
+@pytest.mark.parametrize("broadcast_ranks", [True, False])
+def test_round_job_budget(spark, broadcast_ranks):
+    """A round is at most three Spark jobs (two on the broadcast gather): the
+    convergence stats ride on the checkpoint job instead of running their
+    own. Counted as the extra jobs of 4 extra rounds."""
+    sc = spark.sparkContext
+    df = _edges_df(spark, _random_edges(5, n=30, m=90))
+
+    def jobs(max_iter):
+        group = f"pagerank-budget-{broadcast_ranks}-{max_iter}"
+        sc.setJobGroup(group, group)
+        try:
+            res = pagerank(df, tol=0.0, max_iter=max_iter, broadcast_ranks=broadcast_ranks)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        for m in res.metrics:
+            assert {"delta_l1", "dangling_mass", "sum_rank"} <= m.keys()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs(6) - jobs(2) <= 3 * 4
+
+
+def test_shuffle_stats_unavailable_is_marked(spark, monkeypatch):
+    """When the status API cannot be reached, the polling round says so
+    instead of silently recording nothing."""
+    import urllib.request
+
+    def refuse(*args, **kwargs):
+        raise OSError("status API unreachable")
+
+    monkeypatch.setattr(urllib.request, "urlopen", refuse)
+    res = pagerank(_edges_df(spark, EDGES_4), tol=0.0, max_iter=2)
+    last = res.metrics[-1]
+    assert last["shuffle_stats"] == "unavailable"
+    assert "shuffle_read_bytes" not in last
+
+
 def test_parse_topk_report_scan(spark):
     df = parse_topk_report(spark, GOLDEN_1K)
     rows = {r.id: r.score for r in df.collect()}
