@@ -302,53 +302,6 @@ best. Low-proc cells are the most spread-prone (a 4-proc draw landed
 tighten upward. Re-run: `python BENCH/membw_probe.py --save`.
 """
 
-    def _ab_md():
-        """Shuffle 2→8 partitions A/B from BENCH/ab_partitions.json (written
-        by interleave_ab.py); empty if never run."""
-        path = BENCH_DIR / "ab_partitions.json"
-        if not path.exists():
-            return ""
-        ab = json.loads(path.read_text())
-        summ = ab.get("summary", {})
-        if not summ:
-            return ""
-        rows = "\n".join(
-            f"| {k} | {v['tput']:,.0f} | {v['median_iter_sec']} | {v['draws']} |"
-            for k, v in sorted(summ["best"].items())
-        )
-        e64 = summ.get("eff_2to8_p64")
-        ept = summ.get("eff_2to8_p=threads")
-        if ept is None or e64 is None:
-            return ""
-        if max(e64, ept) >= 0.8:
-            winner = "p≈threads" if ept > e64 else "p=64"
-            concl = (
-                f"the pair reaches the 0.8 target under the {winner} arm — "
-                "the knob matters at this thread count and the banked "
-                "config keeps the better arm's evidence"
-            )
-        else:
-            concl = (
-                "both arms land below 0.8 — the partition count is NOT the "
-                "cause of the sub-0.8 pair; the falloff is host-bounded "
-                "(see the per-window correlation table below)"
-            )
-        return f"""
-### A/B — is the fixed 64-partition config depressing the 2→8 pair?
-
-`BENCH/interleave_ab.py` re-ran the shuffle worker at local[2] and
-local[8] in interleaved rounds under BOTH configs: the banked
-`partitions=64` and `partitions≈threads` (2 at local[2], 8 at local[8]).
-Best per arm:
-
-| cell/arm | edges/sec/iter (best) | median iter (s) | draws |
-|---|---|---|---|
-{rows}
-
-Implied 2→8 efficiency: **{e64:.3f} with p=64** vs **{ept:.3f} with
-p≈threads**: {concl}.
-"""
-
     def _warm_md():
         """Incremental re-rank evidence from BENCH/warm.json (written by
         `warm_bench.py --save`); empty if never run."""
@@ -414,99 +367,6 @@ corroboration at a scale where exact ground truth is off the table
 feasible, plus IVF's nprobe=k ≡ exact equivalence, which is
 scale-independent by construction). Re-run:
 `python BENCH/ann_bench.py --save`.
-"""
-
-    def _paired_md():
-        """Same-round paired efficiency for the shuffle 2→8 pair: each
-        trial round runs the local[2] cell immediately followed by the
-        local[8] cell (adjacent records in all_trials), so the two draws
-        sample the same host window. The cross-window best-of-cells pair
-        above can only mix windows; this is the within-window view."""
-        pairs = []
-        for a, b in zip(all_trials, all_trials[1:]):
-            if (
-                a.get("mode") == b.get("mode") == "shuffle"
-                and a.get("input") == b.get("input")
-                and (a.get("cpus"), b.get("cpus")) == (2, 8)
-            ):
-                e2 = a["edges_per_sec_per_iter"]
-                e8 = b["edges_per_sec_per_iter"]
-                pairs.append((e2, e8, e8 / (4 * e2)))
-        if len(pairs) < 3:
-            return ""
-        effs = sorted(p[2] for p in pairs)
-        med = effs[len(effs) // 2]
-        mx = max(effs)
-        n_hi = sum(1 for e in effs if e >= 0.7)
-        rows = "\n".join(
-            f"| {i + 1} | {e2:,.0f} | {e8:,.0f} | {eff:.3f} |"
-            for i, (e2, e8, eff) in enumerate(pairs)
-        )
-        return f"""
-### Same-window paired efficiency — the 2→8 pair without window mixing
-
-The banked pair above divides the best local[8] draw by the best local[2]
-draw, which usually come from DIFFERENT host windows — steal in either
-window biases the ratio. Each harness round runs the two cells
-back-to-back, so pairing within a round holds the window (mostly) fixed:
-
-| round | local[2] e/s/iter | local[8] e/s/iter | paired 2→8 efficiency |
-|---|---|---|---|
-{rows}
-
-Median paired efficiency {med:.3f}, max {mx:.3f} over {len(pairs)}
-rounds ({n_hi} rounds ≥ 0.7). The spread ({min(effs):.3f}–{mx:.3f})
-matches the documented steal magnitude, and the existence of
-windows at {mx:.3f} shows **no engine mechanism caps this pair below
-0.8** — a genuine serialization bottleneck would bind in every window,
-quiet or not. (A single paired draw can also overshoot when its
-local[2] half caught steal, so the claim drawn here is the existence
-bound plus the ≥0.7 frequency, not any one round's number.)
-"""
-
-    def _interleave_md():
-        """Per-window engine-vs-probe correlation from
-        BENCH/probe_interleave.json; empty if never run."""
-        path = BENCH_DIR / "probe_interleave.json"
-        if not path.exists():
-            return ""
-        il = json.loads(path.read_text())
-        if not il.get("rounds"):
-            return ""
-        rows = "\n".join(
-            f"| {i + 1} | {r['engine8']:,.0f} | {r['probe8']:,.0f} "
-            f"| {r['engine32']:,.0f} | {r['probe32']:,.0f} "
-            f"| {r['engine_eff']:.3f} | {r['probe_eff']:.3f} |"
-            for i, r in enumerate(il["rounds"])
-        )
-        ee = [r["engine_eff"] for r in il["rounds"]]
-        pe = [r["probe_eff"] for r in il["rounds"]]
-        n_ge = sum(1 for r in il["rounds"] if r["engine_eff"] >= r["probe_eff"])
-        concl = (
-            f"the engine matched or beat the no-software control in "
-            f"{n_ge}/{len(ee)} windows — the 8→32 falloff is bounded by the "
-            "box (socket bandwidth + steal), not by any engine mechanism"
-            if n_ge * 2 >= len(ee)
-            else f"the engine scaled worse than the control in "
-            f"{len(ee) - n_ge}/{len(ee)} windows — some engine-side 8→32 "
-            "overhead remains on top of the host ceiling"
-        )
-        return f"""
-### Per-window correlation — engine draws paired with same-window probe draws
-
-Each row is one interleaved round of `BENCH/interleave_ab.py`: a shuffle
-engine draw at local[8] immediately followed by an engine-free membw
-probe draw at 8 procs, then the same at 32 — so engine and probe sample
-the SAME host window, making the steal attribution per-window rather than
-per-day:
-
-| round | engine@8 (e/s/iter) | probe@8 (e/s) | engine@32 | probe@32 | engine 8→32 eff | probe 8→32 eff |
-|---|---|---|---|---|---|---|
-{rows}
-
-Probe efficiency (pure independent native processes, nothing shared but
-the hardware) ranges {min(pe):.3f}-{max(pe):.3f} across windows while the
-engine's ranges {min(ee):.3f}-{max(ee):.3f} on the same windows: {concl}.
 """
 
     sh_head_eff = sh_headline["efficiency"] if sh_headline else 0.0
@@ -638,7 +498,7 @@ aggregation remains implemented and tested (`pagerank(salt_buckets=S)`,
 equivalence-gated by tests/test_pagerank.py) for gathers whose aggregate
 is NOT map-side combinable (e.g. collect-style neighborhoods) and for
 join-side skew, where salting is the correct tool.
-{_ab_md()}{_paired_md()}{_interleave_md()}{_warm_md()}{_ann_md()}
+{_warm_md()}{_ann_md()}
 ## Graph-kernel validation at 1M nodes / 10M edges (local[32])
 
 Same deterministic Zipf generator, one-off wall-clock validation of the

@@ -669,7 +669,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # rows-only because xxhash64 has no DuckDB equivalent).
         d = _t(spark, sf, "documents")
         return dedupe.minhash_lsh_dedupe_pairs(
-            d, "doc_id", "text", threshold=0.5, hash_fn="md5"
+            d, "doc_id", "text", threshold=0.5, hash_fn="md5", max_bucket_size=None
         ).select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
     def d4_simhash_fingerprints(spark, sf):

@@ -287,3 +287,22 @@ def generate_embeddings_df(
         lambda pos: (u(seed * 3 + 1, cid, pos) + F.lit(noise) * u(seed * 3 + 2, F.col("id"), pos)).cast("float"),
     )
     return rng.select(F.col("id").alias("vec_id"), vec.alias("embedding"))
+
+
+def random_graph_edges(
+    n_nodes: int = 1000, n_edges: int = 10_000, seed: int = 1
+) -> list[tuple[int, int]]:
+    """Seeded uniform random digraph with the edge-fixture properties of
+    FIXTURES.md §2 (the shape of the reference's random_1k_10k.txt):
+    `n_edges` distinct (src, dst) pairs, no self-loops, in draw order, so a
+    prefix is a uniform sample. The defaults touch every id 0..n_nodes-1."""
+    rng = random.Random(seed)
+    seen: set[tuple[int, int]] = set()
+    out = []
+    while len(out) < n_edges:
+        e = (rng.randrange(n_nodes), rng.randrange(n_nodes))
+        if e[0] != e[1] and e not in seen:
+            seen.add(e)
+            out.append(e)
+    return out
+

@@ -25,9 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-
-def _ckpt(df: DataFrame, P: int, key: str) -> DataFrame:
-    return df.repartition(P, key).localCheckpoint(eager=True)
+from engine.operators._checkpoint import checkpoint
 
 
 def betweenness_bounded(
@@ -47,7 +45,7 @@ def betweenness_bounded(
         raise ValueError("max_h must be >= 1")
     spark = edges.sparkSession
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    e = _ckpt(
+    e = checkpoint(
         edges.filter(F.col("src") != F.col("dst")).select("src", "dst").distinct(),
         P,
         "src",
@@ -62,7 +60,7 @@ def betweenness_bounded(
     # forward: levels[d] = (s, v, sig) with d(s,v) = d exactly and
     # sig = σ_sv (number of shortest s→v paths)
     levels: list[DataFrame] = [
-        _ckpt(
+        checkpoint(
             srcs.select(
                 F.col("id").alias("s"), F.col("id").alias("v"),
                 F.lit(1).cast("long").alias("sig"),
@@ -83,9 +81,9 @@ def betweenness_bounded(
             .groupBy("s", F.col("nv").alias("v"))
             .agg(F.sum("sig").alias("sig"))
         )
-        lvl = _ckpt(grown, P, "v")
+        lvl = checkpoint(grown, P, "v")
         levels.append(lvl)
-        seen = _ckpt(seen.union(lvl), P, "v")
+        seen = checkpoint(seen.union(lvl), P, "v")
 
     # backward: δ at the horizon is 0; for d = max_h-1 .. 1,
     # δ_d(s,v) = Σ_{v→w, d(s,w)=d+1} σ(v)/σ(w) · (1 + δ_{d+1}(s,w))
@@ -103,7 +101,7 @@ def betweenness_bounded(
         contrib = succ.groupBy("s", F.col("pv").alias("v")).agg(
             F.sum((F.lit(1.0) + F.col("delta")) / F.col("wsig")).alias("_part")
         )
-        delta = _ckpt(
+        delta = checkpoint(
             levels[d]
             .join(contrib, ["s", "v"], "left")
             .select(

@@ -37,9 +37,7 @@ import time
 
 from pyspark.sql import DataFrame, functions as F
 
-
-def _ckpt(df: DataFrame, P: int, key: str) -> DataFrame:
-    return df.repartition(P, key).localCheckpoint(eager=True)
+from engine.operators._checkpoint import checkpoint
 
 
 def _priority(id_col, salt: str):
@@ -70,12 +68,12 @@ def greedy_coloring(
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     base = edges.filter(F.col("src") != F.col("dst")).select("src", "dst")
-    und = _ckpt(
+    und = checkpoint(
         base.union(base.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct(),
         P,
         "src",
     )
-    unc = _ckpt(
+    unc = checkpoint(
         edges.select(F.col("src").alias("id"))
         .union(edges.select(F.col("dst").alias("id")))
         .distinct()
@@ -97,7 +95,7 @@ def greedy_coloring(
             .groupBy(F.col("src").alias("id"))
             .agg(F.min("pd").alias("np"))
         )
-        winners = _ckpt(
+        winners = checkpoint(
             unc.join(nbr_min, "id", "left")
             .filter(F.col("np").isNull() | (F.col("p") < F.col("np")))
             .select("id"),
@@ -135,9 +133,9 @@ def greedy_coloring(
                 F.lit(0).cast("int").alias("color"),
                 F.lit(rnd).cast("int").alias("round"),
             )
-        batch = _ckpt(batch, P, "id")
-        colored = batch if colored is None else _ckpt(colored.union(batch), P, "id")
-        unc = _ckpt(unc.join(winners, "id", "left_anti"), P, "id")
+        batch = checkpoint(batch, P, "id")
+        colored = batch if colored is None else checkpoint(colored.union(batch), P, "id")
+        unc = checkpoint(unc.join(winners, "id", "left_anti"), P, "id")
         n_unc = unc.count()
         if metrics is not None:
             metrics.append(

@@ -14,12 +14,11 @@ shortcuts. Edge sets are kept in canonical (big, small) orientation.
 
 from __future__ import annotations
 
-import os
 import time
 
 from pyspark.sql import DataFrame, functions as F
 
-from engine.operators._checkpoint import load_manifest, read_snapshot, snapshot_state
+from engine.operators._checkpoint import read_snapshot, resume_point, snapshot_state
 from engine.operators._pins import pin as _pin
 
 
@@ -67,7 +66,6 @@ def connected_components(
     num_partitions: int | None = None,
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 3,
-    resume: bool = True,
 ) -> DataFrame:
     """Returns (id BIGINT, label BIGINT), label = min node id in component.
 
@@ -75,37 +73,26 @@ def connected_components(
     themselves. Default universe = edge endpoints.
 
     checkpoint_dir: round-stamped Parquet snapshots of the alternation's
-    edge-set state + manifest (per-round edge counts, per-partition lineage);
-    a rerun with the same dir resumes from the last completed round — the
-    alternation is deterministic, so the resumed run converges to the same
-    star forest.
+    edge-set state + manifest (per-round edge counts, per-partition
+    lineage), resumed through _checkpoint.resume_point; the alternation is
+    deterministic, so a resumed run converges to the same star forest.
     """
     spark = edges.sparkSession
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     start_round = 0
     round_metrics: list[dict] = []
-    e = None
-    man = None
-    m_raw = None
-    if checkpoint_dir:
-        os.makedirs(checkpoint_dir, exist_ok=True)
-        # input-identity guard (mirrors pagerank/labelprop's n check): the
-        # manifest records the raw input edge count; resuming against a
-        # checkpoint written for a different edge set is refused instead of
-        # silently returning the previous graph's components.
-        m_raw = edges.count()
-        man = load_manifest(checkpoint_dir) if resume else None
-        if man and man.get("kernel") == "cc" and man.get("input_edges") == m_raw:
-            start_round = man["completed_iter"] + 1
-            round_metrics = man.get("iterations", [])
-            e = (
-                read_snapshot(spark, checkpoint_dir, man["completed_iter"])
-                .repartition(P, "b")
-                .localCheckpoint(eager=True)
-            )
-    if e is None:
-        man = None
+    m_raw = edges.count() if checkpoint_dir else None
+    man = resume_point(checkpoint_dir, "cc", input_edges=m_raw)
+    if man:
+        start_round = man["completed_iter"] + 1
+        round_metrics = man.get("iterations", [])
+        e = (
+            read_snapshot(spark, checkpoint_dir, man["completed_iter"])
+            .repartition(P, "b")
+            .localCheckpoint(eager=True)
+        )
+    else:
         # tracked pin (releasable): unpersisted in the round loop; when the
         # loop never runs (resumed-converged manifests) pin_scope /
         # release_all_pins frees it

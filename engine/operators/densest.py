@@ -36,9 +36,7 @@ import time
 
 from pyspark.sql import DataFrame, functions as F
 
-
-def _ckpt(df: DataFrame, P: int, key: str) -> DataFrame:
-    return df.repartition(P, key).localCheckpoint(eager=True)
+from engine.operators._checkpoint import checkpoint
 
 
 def _simple_und(edges: DataFrame) -> DataFrame:
@@ -76,7 +74,7 @@ def peel_decomposition(
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     factor = 2.0 * (1.0 + eps)
 
-    und = _ckpt(_simple_und(edges), P, "src")
+    und = checkpoint(_simple_und(edges), P, "src")
     out = None  # (id, peel_round) accumulator
 
     rounds = fixed_rounds if fixed_rounds is not None else max_rounds
@@ -86,7 +84,7 @@ def peel_decomposition(
         deg = und.groupBy(F.col("src").alias("id")).agg(
             F.count(F.lit(1)).alias("deg")
         )
-        deg = _ckpt(deg, P, "id")
+        deg = checkpoint(deg, P, "id")
         tot = deg.agg(
             F.count(F.lit(1)).alias("n"), F.sum("deg").alias("deg2")
         )  # sum(deg) = 2|E(S)|
@@ -99,7 +97,7 @@ def peel_decomposition(
             "id", F.lit(rnd).cast("int").alias("peel_round")
         )
         out = peeled if out is None else out.union(peeled)
-        und = _ckpt(
+        und = checkpoint(
             und.join(
                 peeled.select(F.col("id").alias("src")), "src", "left_anti"
             ).join(peeled.select(F.col("id").alias("dst")), "dst", "left_anti")
@@ -133,8 +131,8 @@ def peel_decomposition(
         .select("id", F.lit(None).cast("int").alias("peel_round"))
     )
     if out is None:
-        return _ckpt(survivors, P, "id")
-    return _ckpt(out.union(survivors), P, "id")
+        return checkpoint(survivors, P, "id")
+    return checkpoint(out.union(survivors), P, "id")
 
 
 def densest_subgraph(

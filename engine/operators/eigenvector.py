@@ -30,9 +30,7 @@ import time
 
 from pyspark.sql import DataFrame, functions as F
 
-
-def _ckpt(df: DataFrame, P: int, key: str) -> DataFrame:
-    return df.repartition(P, key).localCheckpoint(eager=True)
+from engine.operators._checkpoint import checkpoint
 
 
 def eigenvector_centrality(
@@ -56,7 +54,7 @@ def eigenvector_centrality(
     spark = edges.sparkSession
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    e = _ckpt(edges.select("src", "dst").distinct(), P, "src")
+    e = checkpoint(edges.select("src", "dst").distinct(), P, "src")
     nodes = (
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))
@@ -65,7 +63,7 @@ def eigenvector_centrality(
     n = nodes.count()
     if n == 0:
         raise ValueError("eigenvector_centrality on an empty edge set")
-    x = _ckpt(nodes.select("id", F.lit(1.0 / math.sqrt(n)).alias("x")), P, "id")
+    x = checkpoint(nodes.select("id", F.lit(1.0 / math.sqrt(n)).alias("x")), P, "id")
 
     converged = tol <= 0.0
     delta = float("nan")
@@ -76,7 +74,7 @@ def eigenvector_centrality(
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum("x").alias("g"))
         )
-        raw = _ckpt(
+        raw = checkpoint(
             x.select("id", F.col("x").alias("x_old"))
             .join(gathered, "id", "left")
             .select("id", F.coalesce("g", F.lit(0.0)).alias("g"), "x_old"),

@@ -25,9 +25,7 @@ import time
 
 from pyspark.sql import DataFrame, functions as F
 
-
-def _ckpt(df: DataFrame, P: int, key: str) -> DataFrame:
-    return df.repartition(P, key).localCheckpoint(eager=True)
+from engine.operators._checkpoint import checkpoint
 
 
 def katz_centrality(
@@ -52,13 +50,13 @@ def katz_centrality(
     spark = edges.sparkSession
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    e = _ckpt(edges.select("src", "dst"), P, "src")
+    e = checkpoint(edges.select("src", "dst"), P, "src")
     nodes = (
         edges.select(F.col("src").alias("id"))
         .union(edges.select(F.col("dst").alias("id")))
         .distinct()
     )
-    x = _ckpt(nodes.select("id", F.lit(1.0).alias("x")), P, "id")
+    x = checkpoint(nodes.select("id", F.lit(1.0).alias("x")), P, "id")
 
     converged = tol <= 0.0
     for it in range(max_iter):
@@ -68,7 +66,7 @@ def katz_centrality(
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum("x").alias("g"))
         )
-        x_new = _ckpt(
+        x_new = checkpoint(
             x.select("id", F.col("x").alias("x_old"))
             .join(gathered, "id", "left")
             .select(

@@ -12,12 +12,11 @@ Per round: one join (adjacency ⋈ labels) + one two-level aggregate
 
 from __future__ import annotations
 
-import os
 import time
 
 from pyspark.sql import DataFrame, functions as F
 
-from engine.operators._checkpoint import load_manifest, read_snapshot, snapshot_state
+from engine.operators._checkpoint import read_snapshot, resume_point, snapshot_state
 
 
 def label_propagation(
@@ -28,7 +27,6 @@ def label_propagation(
     broadcast_labels: bool | None = None,
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 5,
-    resume: bool = True,
     weight_col: str | None = None,
 ) -> DataFrame:
     """Returns (id BIGINT, label BIGINT) at convergence (or max_iter).
@@ -48,9 +46,9 @@ def label_propagation(
     False → shuffle join on v. None → auto by node count.
 
     checkpoint_dir: iteration-stamped Parquet label snapshots + manifest
-    (per-round changed-counts, per-partition lineage) — a rerun with the
-    same dir resumes from the last completed round (synchronous rounds +
-    min tie-break make the resumed trajectory identical).
+    (per-round changed-counts, per-partition lineage), resumed through
+    _checkpoint.resume_point (synchronous rounds + min tie-break make the
+    resumed trajectory identical).
     """
     from engine.operators.pagerank import BROADCAST_NODE_LIMIT
 
@@ -97,28 +95,25 @@ def label_propagation(
         .repartition(P, "u" if broadcast_labels else "v")
         .persist()
     )
-    adj.count()
+    adj_rows = adj.count()
 
     start_iter = 0
     round_metrics: list[dict] = []
-    labels = None
-    if checkpoint_dir:
-        os.makedirs(checkpoint_dir, exist_ok=True)
-        man = load_manifest(checkpoint_dir) if resume else None
-        kern = "labelprop" if weight_col is None else "labelprop_weighted"
-        if man and man.get("kernel") == kern and man.get("n") == n:
-            start_iter = man["completed_iter"] + 1
-            round_metrics = man.get("iterations", [])
-            labels = (
-                read_snapshot(spark, checkpoint_dir, man["completed_iter"])
-                .repartition(P, "id")
-                .localCheckpoint(eager=True)
-            )
-            if man.get("converged"):
-                adj.unpersist()
-                nodes.unpersist()
-                return labels
-    if labels is None:
+    kernel = "labelprop" if weight_col is None else "labelprop_weighted"
+    man = resume_point(checkpoint_dir, kernel, n=n, adj_rows=adj_rows)
+    if man:
+        start_iter = man["completed_iter"] + 1
+        round_metrics = man.get("iterations", [])
+        labels = (
+            read_snapshot(spark, checkpoint_dir, man["completed_iter"])
+            .repartition(P, "id")
+            .localCheckpoint(eager=True)
+        )
+        if man.get("converged"):
+            adj.unpersist()
+            nodes.unpersist()
+            return labels
+    else:
         labels = nodes.select("id", F.col("id").alias("label")).persist()
         labels.count()
 
@@ -160,8 +155,9 @@ def label_propagation(
                 checkpoint_dir,
                 it,
                 {
-                    "kernel": "labelprop" if weight_col is None else "labelprop_weighted",
+                    "kernel": kernel,
                     "n": n,
+                    "adj_rows": adj_rows,
                     "converged": changed == 0,
                     "iterations": round_metrics,
                 },

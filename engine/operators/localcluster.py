@@ -47,9 +47,7 @@ import time
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-
-def _ckpt(df: DataFrame, P: int, key: str) -> DataFrame:
-    return df.repartition(P, key).localCheckpoint(eager=True)
+from engine.operators._checkpoint import checkpoint
 
 
 def _simple_undirected(edges: DataFrame) -> DataFrame:
@@ -86,13 +84,13 @@ def ppr_push(
     spark = edges.sparkSession
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    und = _ckpt(_simple_undirected(edges), P, "src")
+    und = checkpoint(_simple_undirected(edges), P, "src")
     deg = und.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("deg"))
 
     n_seeds = seeds.select("id").distinct().count()
     if n_seeds == 0:
         raise ValueError("ppr_push needs at least one seed")
-    state = _ckpt(
+    state = checkpoint(
         seeds.select("id")
         .distinct()
         .join(deg, "id", "left")
@@ -146,7 +144,7 @@ def ppr_push(
                 F.coalesce("deg", "deg2", F.lit(0)).alias("deg"),
             )
         )
-        state = _ckpt(new_state, P, "id")
+        state = checkpoint(new_state, P, "id")
         if metrics is not None:
             metrics.append(
                 {

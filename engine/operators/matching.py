@@ -38,9 +38,7 @@ import time
 
 from pyspark.sql import DataFrame, functions as F
 
-
-def _ckpt(df: DataFrame, P: int, key: str) -> DataFrame:
-    return df.repartition(P, key).localCheckpoint(eager=True)
+from engine.operators._checkpoint import checkpoint
 
 
 def _edge_priority(a, b, rnd: int, salt: str):
@@ -76,7 +74,7 @@ def maximal_matching(
     spark = edges.sparkSession
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    live = _ckpt(
+    live = checkpoint(
         edges.filter(F.col("src") != F.col("dst"))
         .select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
@@ -102,7 +100,7 @@ def maximal_matching(
             .groupBy("v")
             .agg(F.min("p").alias("mp"))
         )
-        sel = _ckpt(
+        sel = checkpoint(
             pri.join(
                 vmin.select(F.col("v").alias("a"), F.col("mp").alias("ma")), "a"
             )
@@ -115,7 +113,7 @@ def maximal_matching(
         batch = sel.select("a", "b", F.lit(rnd).cast("int").alias("round"))
         matched = batch if matched is None else matched.union(batch)
         mv = sel.select(F.col("a").alias("v")).union(sel.select("b")).distinct()
-        live = _ckpt(
+        live = checkpoint(
             live.join(mv.withColumnRenamed("v", "a"), "a", "left_anti").join(
                 mv.withColumnRenamed("v", "b"), "b", "left_anti"
             ).select("a", "b"),
@@ -146,4 +144,4 @@ def maximal_matching(
             F.col("a"), F.col("b"), F.lit(None).cast("int").alias("round")
         ).limit(0)
     # compact the per-round union tree (bfs.py plan-depth rule)
-    return _ckpt(matched, P, "a")
+    return checkpoint(matched, P, "a")

@@ -37,7 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from engine.operators.walks import _ckpt, _hash_idx
+from engine.operators._checkpoint import checkpoint
+from engine.operators.walks import _hash_idx
 
 
 def _dense_index(nodes: DataFrame, P: int) -> DataFrame:
@@ -88,7 +89,7 @@ def mc_pagerank(
 
     adj = edges.select("src", "dst").distinct()
     w = Window.partitionBy("src").orderBy("dst")
-    adj = _ckpt(
+    adj = checkpoint(
         adj.select("src", "dst", (F.row_number().over(w) - 1).cast("long").alias("idx")),
         P,
         "src",
@@ -101,7 +102,7 @@ def mc_pagerank(
             .union(edges.select(F.col("dst").alias("id")))
             .distinct()
         )
-    jmp = _ckpt(_dense_index(nodes.select("id").distinct(), P), P, "jidx")
+    jmp = checkpoint(_dense_index(nodes.select("id").distinct(), P), P, "jidx")
     n = jmp.count()
 
     # survive iff hash32 < floor(alpha·2³²): the '#t' tag decorrelates the
@@ -109,7 +110,7 @@ def mc_pagerank(
     threshold = int(alpha * (1 << 32))
 
     replicas = spark.range(num_walks).select(F.col("id").alias("rep"))
-    frontier = _ckpt(
+    frontier = checkpoint(
         jmp.select("id")
         .crossJoin(replicas)
         .select(
@@ -142,10 +143,10 @@ def mc_pagerank(
             .join(jmp, "jidx")
             .select("walk_id", F.col("id").alias("cur"))
         )
-        frontier = _ckpt(linked.unionByName(jumped), P, "cur")
+        frontier = checkpoint(linked.unionByName(jumped), P, "cur")
         visits = visits.union(frontier.select(F.col("cur").alias("node")))
         if step % check_every == 0:
-            visits = _ckpt(visits, P, "node")
+            visits = checkpoint(visits, P, "node")
             if frontier.limit(1).count() == 0:
                 break
 

@@ -37,9 +37,7 @@ import time
 
 from pyspark.sql import DataFrame, functions as F
 
-
-def _ckpt(df: DataFrame, P: int, key: str) -> DataFrame:
-    return df.repartition(P, key).localCheckpoint(eager=True)
+from engine.operators._checkpoint import checkpoint
 
 
 def _priority(id_col, rnd: int, salt: str):
@@ -73,12 +71,12 @@ def maximal_independent_set(
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     base = edges.filter(F.col("src") != F.col("dst")).select("src", "dst")
-    und = _ckpt(
+    und = checkpoint(
         base.union(base.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct(),
         P,
         "src",
     )
-    live = _ckpt(
+    live = checkpoint(
         edges.select(F.col("src").alias("id"))
         .union(edges.select(F.col("dst").alias("id")))
         .distinct(),
@@ -99,14 +97,14 @@ def maximal_independent_set(
             .groupBy(F.col("src").alias("id"))
             .agg(F.min("pd").alias("np"))
         )
-        mis_new = _ckpt(
+        mis_new = checkpoint(
             pri.join(nbr_min, "id", "left")
             .filter(F.col("np").isNull() | (F.col("p") < F.col("np")))
             .select("id"),
             P,
             "id",
         )
-        covered_new = _ckpt(
+        covered_new = checkpoint(
             und.join(mis_new.select(F.col("id").alias("src")), "src", "left_semi")
             .select(F.col("dst").alias("id"))
             .distinct()
@@ -119,7 +117,7 @@ def maximal_independent_set(
             covered_new.select("id", F.lit("covered").alias("status"))
         )
         decided = batch if decided is None else decided.union(batch)
-        live = _ckpt(
+        live = checkpoint(
             live.join(mis_new, "id", "left_anti").join(covered_new, "id", "left_anti"),
             P,
             "id",
@@ -146,4 +144,4 @@ def maximal_independent_set(
 
     out = decided.union(live.select("id", F.lit("live").alias("status")))
     # compact the per-round union tree (bfs.py plan-depth rule)
-    return _ckpt(out, P, "id")
+    return checkpoint(out, P, "id")

@@ -33,9 +33,7 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
-
-def _ckpt(df: DataFrame, P: int, key: str) -> DataFrame:
-    return df.repartition(P, key).localCheckpoint(eager=True)
+from engine.operators._checkpoint import checkpoint
 
 
 def _nodes(edges: DataFrame) -> DataFrame:
@@ -55,12 +53,12 @@ def neighborhood_exact(
     set. N(0) = |V| (every vertex reaches itself)."""
     spark = edges.sparkSession
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    e = _ckpt(
+    e = checkpoint(
         edges.filter(F.col("src") != F.col("dst")).select("src", "dst").distinct(),
         P,
         "src",
     )
-    pairs = _ckpt(
+    pairs = checkpoint(
         _nodes(edges).select(F.col("id").alias("a"), F.col("id").alias("b")), P, "a"
     )
     counts = [(0, pairs.count())]
@@ -70,7 +68,7 @@ def neighborhood_exact(
                 "a", F.col("dst").alias("b")
             )
         ).distinct()
-        pairs = _ckpt(grown, P, "a")
+        pairs = checkpoint(grown, P, "a")
         counts.append((h, pairs.count()))
     return spark.createDataFrame(counts, "h bigint, pairs bigint")
 
@@ -104,7 +102,7 @@ def neighborhood_hyperball(
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     m = 1 << b
 
-    e = _ckpt(
+    e = checkpoint(
         edges.filter(F.col("src") != F.col("dst")).select("src", "dst").distinct(),
         P,
         "src",
@@ -126,7 +124,7 @@ def neighborhood_hyperball(
         .otherwise(F.lit(W + 1) - bitlen)
         .cast("int")
     )
-    sketch = _ckpt(
+    sketch = checkpoint(
         nodes.select("id", idx.alias("_i"), rank.alias("_r"))
         .select(
             "id",
@@ -170,7 +168,7 @@ def neighborhood_hyperball(
             .groupBy(F.col("src").alias("id"), "reg")
             .agg(F.max("val").alias("nval"))
         )
-        merged = _ckpt(
+        merged = checkpoint(
             sketch.join(nbr, ["id", "reg"], "left").select(
                 "id",
                 "reg",
@@ -196,13 +194,13 @@ def distances_exact(
     closeness_exact, small-scale / sparse subgraphs only)."""
     spark = edges.sparkSession
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    e = _ckpt(
+    e = checkpoint(
         edges.filter(F.col("src") != F.col("dst")).select("src", "dst").distinct(),
         P,
         "src",
     )
     nodes = _nodes(edges)
-    visited = _ckpt(
+    visited = checkpoint(
         nodes.select(F.col("id").alias("a"), F.col("id").alias("b"), F.lit(0).alias("d")),
         P,
         "b",
@@ -217,8 +215,8 @@ def distances_exact(
         new = cand.join(visited.select("a", "b"), ["a", "b"], "left_anti").select(
             "a", "b", F.lit(h).alias("d")
         )
-        frontier = _ckpt(new, P, "b")
-        visited = _ckpt(visited.union(frontier), P, "b")
+        frontier = checkpoint(new, P, "b")
+        visited = checkpoint(visited.union(frontier), P, "b")
     return visited
 
 
@@ -307,7 +305,7 @@ def harmonic_hyperball(
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     m = 1 << b
 
-    e = _ckpt(
+    e = checkpoint(
         edges.filter(F.col("src") != F.col("dst")).select("src", "dst").distinct(),
         P,
         "src",
@@ -324,7 +322,7 @@ def harmonic_hyperball(
         .otherwise(F.lit(W + 1) - bitlen)
         .cast("int")
     )
-    sketch = _ckpt(
+    sketch = checkpoint(
         nodes.select("id", idx.alias("_i"), rank.alias("_r"))
         .select(
             "id",
@@ -358,7 +356,7 @@ def harmonic_hyperball(
         return per.select("id", est.alias("est"))
 
     # running state: (id, prev ball estimate, accumulated harmonic)
-    acc = _ckpt(
+    acc = checkpoint(
         per_vertex_est(sketch).select(
             "id", F.col("est").alias("prev"), F.lit(0.0).alias("harmonic")
         ),
@@ -371,7 +369,7 @@ def harmonic_hyperball(
             .groupBy(F.col("src").alias("id"), "reg")
             .agg(F.max("val").alias("nval"))
         )
-        sketch = _ckpt(
+        sketch = checkpoint(
             sketch.join(nbr, ["id", "reg"], "left").select(
                 "id",
                 "reg",
@@ -381,7 +379,7 @@ def harmonic_hyperball(
             "id",
         )
         est_h = per_vertex_est(sketch)
-        acc = _ckpt(
+        acc = checkpoint(
             acc.join(est_h, "id").select(
                 "id",
                 F.col("est").alias("prev"),

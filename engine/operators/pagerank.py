@@ -35,7 +35,6 @@ Physical design (Spark-first, NOT a CSR port):
 from __future__ import annotations
 
 import json
-import os
 import time
 from dataclasses import dataclass, field
 
@@ -85,7 +84,8 @@ def _checkpoint_observed(df: DataFrame, *aggs) -> tuple[DataFrame, dict]:
     return state, obs.get
 
 
-from engine.operators._checkpoint import load_manifest as _load_manifest
+from engine.operators._checkpoint import read_snapshot as _read_snapshot
+from engine.operators._checkpoint import resume_point as _resume_point
 from engine.operators._checkpoint import snapshot_state as _snapshot_state
 
 
@@ -121,7 +121,6 @@ def pagerank(
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 5,
     num_partitions: int | None = None,
-    resume: bool = True,
     broadcast_ranks: bool | None = None,
     personalization: DataFrame | None = None,
     weight_col: str | None = None,
@@ -280,14 +279,11 @@ def pagerank(
     start_iter = 0
     metrics: list[dict] = []
     r = None
-    if checkpoint_dir:
-        os.makedirs(checkpoint_dir, exist_ok=True)
-        man = _load_manifest(checkpoint_dir) if resume else None
-        if man and man.get("completed_iter", -1) >= 0 and man.get("n") == n:
-            start_iter = man["completed_iter"] + 1
-            metrics = man["iterations"]
-            snap = os.path.join(checkpoint_dir, f"iter={man['completed_iter']}")
-            r = spark.read.parquet(snap).join(node_info, "id")
+    man = _resume_point(checkpoint_dir, "pagerank", n=n, m=num_edges, alpha=alpha)
+    if man:
+        start_iter = man["completed_iter"] + 1
+        metrics = man["iterations"]
+        r = _read_snapshot(spark, checkpoint_dir, man["completed_iter"]).join(node_info, "id")
     if r is None and init_ranks is not None:
         # warm start (incremental re-rank over a snapshot delta): seed from a
         # prior run's vector. Ids absent from init_ranks (pages new in this

@@ -40,43 +40,12 @@ vertices) label themselves. Exactly the CC contract, directed.
 
 from __future__ import annotations
 
-import os
 import time
 
 from pyspark.sql import DataFrame, functions as F
 
-from engine.operators._checkpoint import load_manifest, read_snapshot, snapshot_state
+from engine.operators._checkpoint import checkpoint, read_snapshot, resume_point, snapshot_state
 from engine.operators._pins import pin as _pin
-
-
-def _ckpt(df: DataFrame, P: int, key: str | None = None) -> DataFrame:
-    """Materialize a round's state with truncated lineage AND truncated
-    Catalyst statistics.
-
-    `localCheckpoint` truncates the lineage but PASSES THE OPTIMIZED
-    PLAN'S COMPUTED STATS into the resulting LogicalRDD — and the default
-    size estimator multiplies child sizeInBytes through every join, so an
-    iterative kernel that references its previous round k times per round
-    compounds the estimate into a BigInteger whose DIGIT COUNT grows
-    k-fold per round. After a few tens of compounding rounds the driver
-    spends minutes inside BigInteger.multiply in
-    SizeInBytesOnlyStatsPlanVisitor while every executor sits idle
-    (observed: 0.3 s → 3 s → 19 s → 100 s per round on a 300-vertex
-    graph; jstack showed 109 s of Toom-Cook BigInteger CPU). Rebuilding
-    the DataFrame from the checkpointed internal RDD resets the stats to
-    the default leaf estimate, which is what AQE's runtime re-planning
-    uses anyway."""
-    if key is not None:
-        df = df.repartition(P, key)
-    ck = df.localCheckpoint(eager=True)
-    spark = df.sparkSession
-    jdf = ck._jdf
-    return DataFrame(
-        spark._jsparkSession.internalCreateDataFrame(
-            jdf.queryExecution().toRdd(), jdf.schema(), False
-        ),
-        spark,
-    )
 
 
 def _max_prop_jump(
@@ -152,7 +121,7 @@ def _max_prop_jump(
             terms.append(F.coalesce("c_jump", "c_old"))
         # carry the previous value through the checkpoint so the
         # convergence count is one scan over the just-stored blocks
-        val_new = _ckpt(
+        val_new = checkpoint(
             upd.select("id", F.greatest(*terms).alias("val"), "c_old"),
             P,  # already hash-partitioned by id from the join exchange —
                 # an explicit repartition would add a full extra shuffle
@@ -174,7 +143,6 @@ def strongly_connected_components(
     num_partitions: int | None = None,
     metrics: list | None = None,
     checkpoint_dir: str | None = None,
-    resume: bool = True,
 ) -> DataFrame:
     """SCC labels for every vertex: (id BIGINT, label BIGINT).
 
@@ -190,10 +158,8 @@ def strongly_connected_components(
     the three frames (labels-so-far, remaining vertices, induced edges)
     encoded in one part-discriminated table — plus a manifest with
     per-round metrics and per-partition lineage (the CC/LP/pagerank
-    contract). A rerun with the same dir resumes from the last completed
-    outer round; the peel is deterministic, so the resumed run produces
-    identical labels. A manifest written for a different edge set is
-    ignored (fresh start), mirroring components.py.
+    contract), resumed through _checkpoint.resume_point; the peel is
+    deterministic, so a resumed run produces identical labels.
 
     Raises RuntimeError if the decomposition hasn't finished after
     max_outer peels (wrong labels are never returned).
@@ -222,41 +188,34 @@ def strongly_connected_components(
     done: DataFrame | None = None
     all_metrics: list[dict] = []
     start_round = 0
-    resumed = False
-    m_raw = None
-    if checkpoint_dir:
-        os.makedirs(checkpoint_dir, exist_ok=True)
-        # input-identity guard (mirrors components.py): resuming against a
-        # checkpoint written for a different edge set silently starts fresh
-        m_raw = edges.count()
-        man = load_manifest(checkpoint_dir) if resume else None
-        if man and man.get("kernel") == "scc" and man.get("input_edges") == m_raw:
-            snap = read_snapshot(spark, checkpoint_dir, man["completed_iter"])
-            done = snap.filter(F.col("part") == "done").select(
-                F.col("a").alias("id"), F.col("b").alias("label")
-            )
-            remaining = _ckpt(
-                snap.filter(F.col("part") == "rem").select(F.col("a").alias("id")),
-                P,
-                "id",
-            )
-            e = _ckpt(
-                snap.filter(F.col("part") == "e").select(
-                    F.col("a").alias("src"), F.col("b").alias("dst")
-                ),
-                P,
-                "src",
-            )
-            all_metrics = list(man.get("iterations", []))
-            if metrics is not None:
-                metrics.extend(all_metrics)
-            start_round = man["completed_iter"] + 1
-            resumed = True
-            if man.get("finished"):
-                return done.select("id", "label")
-    if not resumed:
-        e = _ckpt(e, P, "src")
-        remaining = _ckpt(nodes, P, "id")
+    m_raw = edges.count() if checkpoint_dir else None
+    man = resume_point(checkpoint_dir, "scc", input_edges=m_raw)
+    if man:
+        snap = read_snapshot(spark, checkpoint_dir, man["completed_iter"])
+        done = snap.filter(F.col("part") == "done").select(
+            F.col("a").alias("id"), F.col("b").alias("label")
+        )
+        remaining = checkpoint(
+            snap.filter(F.col("part") == "rem").select(F.col("a").alias("id")),
+            P,
+            "id",
+        )
+        e = checkpoint(
+            snap.filter(F.col("part") == "e").select(
+                F.col("a").alias("src"), F.col("b").alias("dst")
+            ),
+            P,
+            "src",
+        )
+        all_metrics = list(man.get("iterations", []))
+        if metrics is not None:
+            metrics.extend(all_metrics)
+        start_round = man["completed_iter"] + 1
+        if man.get("finished"):
+            return done.select("id", "label")
+    else:
+        e = checkpoint(e, P, "src")
+        remaining = checkpoint(nodes, P, "id")
     n_remaining = remaining.count()
 
     def _add(labels: DataFrame) -> None:
@@ -316,7 +275,7 @@ def strongly_connected_components(
         # graphs trim for O(diameter) rounds). e is induced once at the
         # fixpoint.
         trims = 0
-        deg = _ckpt(
+        deg = checkpoint(
             e.select(F.col("src").alias("id"), F.lit(1).alias("o"), F.lit(0).alias("i"))
             .union(
                 e.select(F.col("dst").alias("id"), F.lit(0).alias("o"), F.lit(1).alias("i"))
@@ -360,7 +319,7 @@ def strongly_connected_components(
             # aggregates: AQE broadcasts them, so the update is map-side
             # over the checkpointed deg blocks — no vertex-sized shuffle,
             # hence no repartition before the checkpoint
-            deg = _ckpt(
+            deg = checkpoint(
                 deg.filter((F.col("outd") > 0) & (F.col("ind") > 0))
                 .join(dec_in, "id", "left")
                 .join(dec_out, "id", "left")
@@ -379,13 +338,13 @@ def strongly_connected_components(
             # replaced frames — compact periodically to bound plan depth
             # (the BFS visited-compaction rule, bfs.py)
             if done is not None and trims % 25 == 0:
-                done = _ckpt(done, P, "id")
+                done = checkpoint(done, P, "id")
         if trims > 0:
             # alive fixpoint: every surviving deg row has in+out degree
-            remaining = _ckpt(deg.select("id"), P, "id")
+            remaining = checkpoint(deg.select("id"), P, "id")
         if trims > 0 and n_remaining > 0:
             # induce the surviving edge set ONCE at the fixpoint
-            e = _ckpt(
+            e = checkpoint(
                 e.join(remaining.select(F.col("id").alias("src")), "src", "left_semi")
                 .join(remaining.select(F.col("id").alias("dst")), "dst", "left_semi")
                 .select("src", "dst"),
@@ -396,7 +355,7 @@ def strongly_connected_components(
         stats["trim_sec"] = round(time.time() - t0, 4)
         if n_remaining == 0:
             if done is not None:
-                done = _ckpt(done, P, "id")
+                done = checkpoint(done, P, "id")
             stats["wall_sec"] = round(time.time() - t0, 4)
             all_metrics.append(stats)
             if metrics is not None:
@@ -408,7 +367,7 @@ def strongly_connected_components(
         # pointer-jumping max-propagation (see _max_prop_jump): O(log D)
         # rounds, identical fixpoint to the plain synchronous recurrence
         t_color = time.time()
-        init = _ckpt(remaining.select("id", F.col("id").alias("val")), P, "id")
+        init = checkpoint(remaining.select("id", F.col("id").alias("val")), P, "id")
         color_v, c_rounds, colors_done = _max_prop_jump(
             e, "src", "dst", init, P, max_inner
         )
@@ -428,7 +387,7 @@ def strongly_connected_components(
         # and fcolor(r) >= c > r, contradicting fcolor(r) = r). So the
         # intra-color edge set is computed ONCE up front and the per-round
         # color join + filter of the naive form disappears.
-        ecc = _ckpt(
+        ecc = checkpoint(
             e.join(
                 color.select(F.col("id").alias("src"), F.col("color").alias("c_s")),
                 "src",
@@ -453,7 +412,7 @@ def strongly_connected_components(
         roots = color.filter(F.col("color") == F.col("id")).select(
             F.col("id").alias("member"), F.col("id").alias("root")
         )
-        members = _ckpt(roots, P, "member")
+        members = checkpoint(roots, P, "member")
         frontier = members
         for bk in range(max_inner):
             preds = (
@@ -463,14 +422,14 @@ def strongly_connected_components(
                 .select(F.col("src").alias("member"), "root")
                 .distinct()
             )
-            new = _ckpt(preds.join(members, "member", "left_anti"), P)
+            new = checkpoint(preds.join(members, "member", "left_anti"), P)
             n_new = new.count()
             stats["backward_rounds"] = stats.get("backward_rounds", 0) + 1
             if n_new == 0:
                 break
             members = members.union(new)
             if (bk + 1) % 8 == 0:
-                members = _ckpt(members, P, "member")
+                members = checkpoint(members, P, "member")
             frontier = new
         else:
             raise RuntimeError(
@@ -478,7 +437,7 @@ def strongly_connected_components(
             )
         # materialize the accumulated membership once for its three readers
         # (scc_min, the done union, the remaining anti-join)
-        members = _ckpt(members, P, "member")
+        members = checkpoint(members, P, "member")
 
         stats["backward_sec"] = round(time.time() - t_back, 4)
 
@@ -489,7 +448,7 @@ def strongly_connected_components(
                 F.col("member").alias("id"), "label"
             )
         )
-        remaining = _ckpt(
+        remaining = checkpoint(
             remaining.join(
                 members.select(F.col("member").alias("id")), "id", "left_anti"
             ),
@@ -499,14 +458,14 @@ def strongly_connected_components(
         n_remaining = remaining.count()
         if n_remaining > 0:
             # skip the edge re-induction when the peel emptied the graph
-            e = _ckpt(
+            e = checkpoint(
                 e.join(remaining.select(F.col("id").alias("src")), "src", "left_semi")
                 .join(remaining.select(F.col("id").alias("dst")), "dst", "left_semi")
                 .select("src", "dst"),
                 P,
                 "src",
             )
-        done = _ckpt(done, P, "id")
+        done = checkpoint(done, P, "id")
         stats["wall_sec"] = round(time.time() - t0, 4)
         all_metrics.append(stats)
         if metrics is not None:

@@ -52,11 +52,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from engine.operators._checkpoint import checkpoint
 from engine.operators._pins import pin
-
-
-def _ckpt(df: DataFrame, P: int, *keys: str) -> DataFrame:
-    return df.repartition(P, *keys).localCheckpoint(eager=True)
 
 
 def simrank(
@@ -86,7 +83,7 @@ def simrank(
     # the in-degree agg, the diagonal wedge (twice), and both legs of
     # every round's off-diagonal join — pin it (release via pin_scope).
     ie = pin(
-        _ckpt(
+        checkpoint(
             edges.filter(F.col("src") != F.col("dst"))
             .select(F.col("dst").alias("x"), F.col("src").alias("i"))
             .distinct(),
@@ -149,7 +146,7 @@ def simrank(
             )
         )
 
-    s = _ckpt(_score(diag), P, "a")  # round 1: s₀ off-diagonal is empty
+    s = checkpoint(_score(diag), P, "a")  # round 1: s₀ off-diagonal is empty
     for _ in range(iterations - 1):
         if min_sim > 0.0:
             kept = s.filter(F.col("s") >= min_sim)
@@ -176,5 +173,5 @@ def simrank(
             .groupBy("a", "b")
             .agg(F.sum("m").cast("decimal(28,9)").alias("m"))
         )
-        s = _ckpt(_score(contrib), P, "a")
+        s = checkpoint(_score(contrib), P, "a")
     return s

@@ -261,14 +261,16 @@ def square_count(
         .cast("long")
         .alias("wedge_pairs"),
         # exact integer halving: Σ w(w−1) is divisible by 4 uncapped (it is
-        # 2·ΣC(w,2) and ΣC(w,2) = 2·#C4); DECIMAL keeps the division exact
-        # far past 2^53 where a double sum would round
+        # 2·ΣC(w,2) and ΣC(w,2) = 2·#C4); each term is cast to DECIMAL
+        # before the sum, so neither the sum nor the division can overflow
+        # BIGINT or round the way a double sum would past 2^53
         # explicit floor so a capped run (where Σw(w−1) may not divide by 4)
         # agrees bit-for-bit with the DuckDB oracle's '//' integer division;
         # uncapped the division is exact and the floor is a no-op
         F.floor(
-            F.coalesce(F.sum(F.col("w") * (F.col("w") - 1)), F.lit(0)).cast(
-                "decimal(38,0)"
+            F.coalesce(
+                F.sum((F.col("w") * (F.col("w") - 1)).cast("decimal(38,0)")),
+                F.lit(0).cast("decimal(38,0)"),
             )
             / F.lit(4)
         )

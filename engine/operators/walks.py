@@ -28,9 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-
-def _ckpt(df: DataFrame, P: int, key: str) -> DataFrame:
-    return df.repartition(P, key).localCheckpoint(eager=True)
+from engine.operators._checkpoint import checkpoint
 
 
 def _hash_idx(cur, step: int, walk_id, salt: str):
@@ -68,7 +66,7 @@ def random_walks(
     # deterministic neighbor index: row_number over the dst order within
     # each src (a set has one sorted order — reproducible anywhere)
     w = Window.partitionBy("src").orderBy("dst")
-    adj = _ckpt(
+    adj = checkpoint(
         adj.select("src", "dst", (F.row_number().over(w) - 1).cast("long").alias("idx")),
         P,
         "src",
@@ -81,7 +79,7 @@ def random_walks(
         .distinct()
     )
     replicas = spark.range(num_walks).select(F.col("id").alias("rep"))
-    frontier = _ckpt(
+    frontier = checkpoint(
         nodes.crossJoin(replicas).select(
             (F.col("id") * num_walks + F.col("rep")).alias("walk_id"),
             F.col("id").alias("cur"),
@@ -102,12 +100,12 @@ def random_walks(
             .join(adj.withColumnRenamed("src", "cur"), ["cur", "idx"])
             .select("walk_id", F.col("dst").alias("cur"))
         )
-        frontier = _ckpt(chosen, P, "cur")
+        frontier = checkpoint(chosen, P, "cur")
         out = out.union(
             frontier.select("walk_id", F.lit(step).cast("long").alias("step"), F.col("cur").alias("node"))
         )
         if step % 25 == 0:  # bound the output union's plan depth (bfs.py rule)
-            out = _ckpt(out, P, "walk_id")
+            out = checkpoint(out, P, "walk_id")
 
     return out.select("walk_id", "step", "node")
 
@@ -169,14 +167,14 @@ def node2vec_walks(
     spark = edges.sparkSession
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    adj = _ckpt(
+    adj = checkpoint(
         edges.filter(F.col("src") != F.col("dst")).select("src", "dst").distinct(),
         P,
         "src",
     )
     deg = adj.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     w_idx = Window.partitionBy("src").orderBy("dst")
-    adj_idx = _ckpt(
+    adj_idx = checkpoint(
         adj.select("src", "dst", (F.row_number().over(w_idx) - 1).cast("long").alias("idx")),
         P,
         "src",
@@ -199,7 +197,7 @@ def node2vec_walks(
         return out
 
     # step 1: uniform (no prev yet) — the random_walks draw
-    frontier = _ckpt(
+    frontier = checkpoint(
         start.join(deg.withColumnRenamed("src", "cur"), "cur")
         .select(
             "walk_id",
@@ -262,11 +260,11 @@ def node2vec_walks(
             )
             .select("walk_id", F.col("cur").alias("prev"), F.col("dst").alias("cur"))
         )
-        frontier = _ckpt(picked, P, "cur")
+        frontier = checkpoint(picked, P, "cur")
         out = out.union(
             frontier.select("walk_id", F.lit(step).cast("long").alias("step"), F.col("cur").alias("node"))
         )
         if step % 25 == 0:  # bound the output union's plan depth (bfs.py rule)
-            out = _ckpt(out, P, "walk_id")
+            out = checkpoint(out, P, "walk_id")
 
     return out.select("walk_id", "step", "node")

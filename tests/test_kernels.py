@@ -4,12 +4,14 @@ from __future__ import annotations
 
 import random
 
+import numpy as np
+import pytest
+from pyspark.sql import functions as F
+
 from engine.operators.components import connected_components
 from engine.operators.labelprop import label_propagation
 from engine.operators.triangles import triangle_count, triangles_per_vertex
 from oracle import connected_components_py, label_propagation_py, triangle_count_py
-
-REF_1K = "/root/reference/backend/data/random_1k_10k.txt"
 
 
 def _load_edges(path, limit=None):
@@ -217,16 +219,16 @@ def test_triangles_duplicates_and_direction_collapse(spark):
     assert got == triangle_count_py(edges) == 1
 
 
-def test_triangles_reference_1k_graph(spark):
-    edges = _load_edges(REF_1K)
+def test_triangles_reference_1k_graph(spark, ref_1k):
+    edges = _load_edges(ref_1k)
     got = triangle_count(_edges_df(spark, edges)).collect()[0].triangles
     exp = triangle_count_py(edges)
     assert got == exp
     assert exp > 0
 
 
-def test_cc_reference_1k_graph(spark):
-    edges = _load_edges(REF_1K, limit=1500)
+def test_cc_reference_1k_graph(spark, ref_1k):
+    edges = _load_edges(ref_1k, limit=1500)
     got = {r.id: r.label for r in connected_components(_edges_df(spark, edges)).collect()}
     exp = connected_components_py(edges)
     assert got == exp
@@ -301,11 +303,11 @@ def test_bfs_levels_vs_python_oracle(spark):
     assert got == dist
 
 
-def test_hits_vs_numpy_oracle(spark):
+def test_hits_vs_numpy_oracle(spark, ref_1k):
     from engine.operators.hits import hits
     from oracle import hits_numpy
 
-    edges = _load_edges(REF_1K, limit=3000)
+    edges = _load_edges(ref_1k, limit=3000)
     df = _edges_df(spark, edges)
     # identical deterministic recurrence both sides -> compare after the
     # same number of iterations (full convergence to 1e-9 takes hundreds of
@@ -324,13 +326,13 @@ def test_hits_vs_numpy_oracle(spark):
     assert abs(sum(v[1] ** 2 for v in got.values()) - 1.0) < 1e-9
 
 
-def test_hits_broadcast_and_shuffle_gather_agree(spark):
+def test_hits_broadcast_and_shuffle_gather_agree(spark, ref_1k):
     """The broadcast gather and the shuffle (+salted) gather are two physical
     strategies for the same half-step recurrence — scores must agree to
     float-sum-reorder tolerance (mirrors pagerank's strategy-equivalence)."""
     from engine.operators.hits import hits
 
-    edges = _load_edges(REF_1K, limit=2000)
+    edges = _load_edges(ref_1k, limit=2000)
     df = _edges_df(spark, edges)
     bc = hits(df, tol=1e-12, max_iter=25, broadcast_scores=True)
     sh = hits(df, tol=1e-12, max_iter=25, broadcast_scores=False)
@@ -345,13 +347,13 @@ def test_hits_broadcast_and_shuffle_gather_agree(spark):
         assert abs(b[i][0] - sl[i][0]) < 1e-12 and abs(b[i][1] - sl[i][1]) < 1e-12
 
 
-def test_hits_check_every_cadence(spark):
+def test_hits_check_every_cadence(spark, ref_1k):
     """check_every=k skips the convergence-stats job on non-check iterations
     (pagerank's cadence contract): same scores after a fixed iteration count,
     delta_l1 present only on check iterations."""
     from engine.operators.hits import hits
 
-    edges = _load_edges(REF_1K, limit=2000)
+    edges = _load_edges(ref_1k, limit=2000)
     df = _edges_df(spark, edges)
     every = hits(df, tol=1e-12, max_iter=12, check_every=1)
     cadence = hits(df, tol=1e-12, max_iter=12, check_every=4)
@@ -365,21 +367,68 @@ def test_hits_check_every_cadence(spark):
     assert all("wall_sec" in m for m in cadence.metrics)
 
 
-def test_cc_resume_refuses_different_edge_set(spark, tmp_path):
+def _resume_guard_run(kernel, spark, edges, nodes, ck):
+    """(engine result, oracle result) of one resumable kernel on `edges`
+    over the universe `nodes`, snapshotting every round into `ck`."""
+    from engine.operators.pagerank import pagerank
+    from engine.operators.scc import strongly_connected_components
+    from oracle import pagerank_numpy, scc_py
+
+    df, ndf = _edges_df(spark, edges), spark.range(len(nodes))
+    if kernel == "pagerank":
+        res = pagerank(df, ndf, tol=0.0, max_iter=6, checkpoint_dir=ck, checkpoint_every=1)
+        got = [0.0] * len(nodes)
+        for r in res.ranks.collect():
+            got[r.id] = r.rank
+        return got, list(pagerank_numpy(edges, n=len(nodes), tol=0.0, max_iter=6)[0])
+    if kernel == "scc":
+        out, want = strongly_connected_components(df, ndf, checkpoint_dir=ck), scc_py(edges, nodes)
+    elif kernel == "lp":
+        out = label_propagation(df, ndf, checkpoint_dir=ck, checkpoint_every=1)
+        want = label_propagation_py(edges, nodes)
+    else:
+        out = connected_components(df, ndf, checkpoint_dir=ck, checkpoint_every=1)
+        want = connected_components_py(edges, nodes)
+    return {r.id: r.label for r in out.collect()}, want
+
+
+@pytest.mark.parametrize("kernel", ["cc", "lp", "pagerank", "scc"])
+def test_resume_refuses_different_edge_set(spark, tmp_path, kernel):
     """The manifest's input-identity guard: a checkpoint written for one edge
-    set must not be resumed for another — the second run restarts fresh and
-    returns the SECOND graph's components."""
+    set must not be resumed for another over the same node universe — the
+    second run restarts fresh and returns the SECOND graph's result."""
+    nodes = list(range(150))
     g1 = _sparse_graph(n=120, m=150, seed=5)
     g2 = _sparse_graph(n=150, m=260, seed=6)
-    ck = str(tmp_path / "cc_guard_ck")
-    connected_components(_edges_df(spark, g1), checkpoint_dir=ck, checkpoint_every=1).count()
-    got = {
-        r.id: r.label
-        for r in connected_components(
-            _edges_df(spark, g2), checkpoint_dir=ck, checkpoint_every=1
-        ).collect()
-    }
-    assert got == connected_components_py(g2)
+    ck = str(tmp_path / f"{kernel}_guard_ck")
+    _resume_guard_run(kernel, spark, g1, nodes, ck)
+    got, want = _resume_guard_run(kernel, spark, g2, nodes, ck)
+    if kernel == "pagerank":
+        assert np.allclose(got, want, atol=1e-9)
+    else:
+        assert got == want
+
+
+def test_checkpoint_resets_statistics(spark):
+    """_checkpoint.checkpoint returns the same rows with the optimized-plan
+    size reset to spark.sql.defaultSizeInBytes, where a plain
+    localCheckpoint carries the computed estimate forward. Pins the private
+    SparkSession.internalCreateDataFrame / queryExecution().toRdd() path
+    the reset rebuilds through (checked on Spark 4.1.2): an API break or a
+    reset that stops working fails here."""
+    from engine.operators._checkpoint import checkpoint
+
+    df = spark.range(0, 500).select((F.col("id") % 37).alias("id"), F.col("id").alias("v"))
+
+    def size(d):
+        return int(str(d._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+
+    default = spark._jsparkSession.sessionState().conf().defaultSizeInBytes()
+    plain = df.repartition(4, "id").localCheckpoint(eager=True)
+    assert size(plain) < default
+    for ck in (checkpoint(df, 4, "id"), checkpoint(df, 4)):
+        assert sorted(ck.collect()) == sorted(df.collect())
+        assert size(ck) == default
 
 
 def test_bfs_deep_chain_visited_compaction(spark):
@@ -2030,11 +2079,11 @@ def test_frontier_topk_deterministic_and_excludes_visited(spark):
     assert rows[0].n_links == 2 and rows[0].mass == 0.75
 
 
-def test_salsa_vs_numpy_oracle(spark):
+def test_salsa_vs_numpy_oracle(spark, ref_1k):
     from engine.operators.salsa import salsa
     from oracle import salsa_numpy
 
-    edges = _load_edges(REF_1K, limit=3000)
+    edges = _load_edges(ref_1k, limit=3000)
     df = _edges_df(spark, edges)
     # identical deterministic recurrence both sides -> trajectory equality
     # after the same number of iterations (the hits-oracle contract)
@@ -2075,10 +2124,10 @@ def test_salsa_stationary_is_degree_within_component(spark):
         assert abs(got[i][0] - outd.get(i, 0) / m) < 1e-7
 
 
-def test_salsa_broadcast_and_shuffle_gather_agree(spark):
+def test_salsa_broadcast_and_shuffle_gather_agree(spark, ref_1k):
     from engine.operators.salsa import salsa
 
-    edges = _load_edges(REF_1K, limit=2000)
+    edges = _load_edges(ref_1k, limit=2000)
     df = _edges_df(spark, edges)
     bc = salsa(df, tol=1e-12, max_iter=15, broadcast_scores=True)
     sh = salsa(df, tol=1e-12, max_iter=15, broadcast_scores=False)
@@ -2329,14 +2378,14 @@ def test_dag_levels_of_condensation(spark):
     assert got == want
 
 
-def test_powerlaw_mle_vs_numpy(spark):
+def test_powerlaw_mle_vs_numpy(spark, ref_1k):
     """CSN discrete MLE vs the same formula in NumPy on the reference 1k
     graph's in-degree tail."""
     import math
 
     from engine.operators.graph import powerlaw_alpha_mle
 
-    edges = _load_edges(REF_1K)
+    edges = _load_edges(ref_1k)
     row = powerlaw_alpha_mle(_edges_df(spark, edges), k_min=5).collect()[0]
     from collections import Counter
 

@@ -96,8 +96,8 @@ def test_golden_1k_parity(spark):
     assert re.search(r"  node \d+ : 0\.\d{10}", report)
 
 
-def test_salted_gather_equivalent(spark):
-    edges = _load_edges(REF_1K)[:4000]
+def test_salted_gather_equivalent(spark, ref_1k):
+    edges = _load_edges(ref_1k)[:4000]
     df = _edges_df(spark, edges)
     plain = pagerank(df, tol=1e-10, max_iter=50)
     salted = pagerank(df, tol=1e-10, max_iter=50, salt_buckets=8)
@@ -106,11 +106,11 @@ def test_salted_gather_equivalent(spark):
     assert plain.iterations == salted.iterations
 
 
-def test_broadcast_and_shuffle_gather_agree(spark):
+def test_broadcast_and_shuffle_gather_agree(spark, ref_1k):
     """The exchange-free broadcast gather and the shuffle gather are two
     physical strategies for the same recurrence — scores must agree to
     float-sum-reorder tolerance."""
-    edges = _load_edges(REF_1K)[:4000]
+    edges = _load_edges(ref_1k)[:4000]
     df = _edges_df(spark, edges)
     bc = pagerank(df, tol=1e-10, max_iter=40, broadcast_ranks=True)
     sh = pagerank(df, tol=1e-10, max_iter=40, broadcast_ranks=False)
@@ -119,8 +119,8 @@ def test_broadcast_and_shuffle_gather_agree(spark):
     assert bc.iterations == sh.iterations
 
 
-def test_checkpoint_resume_identical(spark, tmp_path):
-    edges = _load_edges(REF_1K)[:3000]
+def test_checkpoint_resume_identical(spark, tmp_path, ref_1k):
+    edges = _load_edges(ref_1k)[:3000]
     df = _edges_df(spark, edges)
     full = pagerank(df, tol=1e-10, max_iter=40, checkpoint_every=4)
 
@@ -134,8 +134,8 @@ def test_checkpoint_resume_identical(spark, tmp_path):
     assert np.allclose(_ranks_array(resumed, n), _ranks_array(full, n), atol=1e-12)
 
 
-def test_iteration_metrics_recorded(spark):
-    edges = _load_edges(REF_1K)[:2000]
+def test_iteration_metrics_recorded(spark, ref_1k):
+    edges = _load_edges(ref_1k)[:2000]
     res = pagerank(_edges_df(spark, edges), tol=1e-8, max_iter=60)
     assert res.converged
     assert len(res.metrics) == res.iterations
@@ -148,6 +148,21 @@ def test_iteration_metrics_recorded(spark):
 
 # the 4-node graph reconstructed for the reference's backend/output.txt
 EDGES_4 = [(0, 1), (0, 2), (1, 2), (2, 3), (2, 0), (3, 0)]
+
+
+def test_golden_4_node_parity(spark):
+    """The reference's backend/output.txt fixed point for the 4-node graph,
+    to the 10 dp it printed (pagerank_gpu defaults alpha=0.85 tol=1e-8
+    max_iter=100), in its report format."""
+    res = pagerank(_edges_df(spark, EDGES_4), alpha=0.85, tol=1e-8, max_iter=100)
+    got = {r.id: r.rank for r in res.ranks.collect()}
+    want = {0: 0.3245614030, 1: 0.1754385970, 2: 0.3245614030, 3: 0.1754385970}
+    assert res.converged
+    for i, score in want.items():
+        assert abs(got[i] - score) < 5e-10
+    report = format_topk_report(4, res.num_edges, 0, sorted(got.items(), key=lambda kv: -kv[1]))
+    for i, score in want.items():
+        assert f"  node {i} : {score:.10f}" in report
 
 
 def _random_edges(seed, n=200, m=700):
@@ -256,10 +271,10 @@ def test_parse_topk_report_scan(spark):
     assert len(rows) == 10
 
 
-def test_personalized_pagerank_vs_oracle(spark):
+def test_personalized_pagerank_vs_oracle(spark, ref_1k):
     from oracle import personalized_pagerank_numpy
 
-    edges = _load_edges(REF_1K)[:3000]
+    edges = _load_edges(ref_1k)[:3000]
     df = _edges_df(spark, edges)
     pers = {3: 5.0, 10: 3.0, 42: 2.0}
     pdf = spark.createDataFrame(list(pers.items()), "id long, weight double")
@@ -334,11 +349,11 @@ def _wedges_df(spark, edges_w):
     return spark.createDataFrame(edges_w, schema="src long, dst long, wt double")
 
 
-def test_weighted_uniform_weights_equal_unweighted(spark):
+def test_weighted_uniform_weights_equal_unweighted(spark, ref_1k):
     """weight_col with constant weights reduces to the unweighted kernel:
     w/Σw == 1/outdeg exactly when all weights are equal (IEEE division of
     equal quantities) — ranks agree to reorder tolerance."""
-    edges = _load_edges(REF_1K)[:3000]
+    edges = _load_edges(ref_1k)[:3000]
     plain = pagerank(_edges_df(spark, edges), tol=1e-10, max_iter=30)
     wdf = _wedges_df(spark, [(u, v, 2.0) for u, v in edges])
     weighted = pagerank(wdf, tol=1e-10, max_iter=30, weight_col="wt")
@@ -501,13 +516,13 @@ def test_spam_mass_vs_numpy_and_farm_detection(spark):
     assert got[0][2] < 0.5 and got[1][2] < 0.5
 
 
-def test_inverse_pagerank_seed_candidates(spark):
+def test_inverse_pagerank_seed_candidates(spark, ref_1k):
     """Seed candidates = top-k PageRank of the transposed graph (Gyöngyi et
     al. 2004 §4.2), vs the NumPy oracle on reversed edges; the top-k is
     planned as TakeOrderedAndProject (no full sort)."""
     from engine.operators.trustrank import inverse_pagerank_seeds
 
-    edges = _load_edges(REF_1K)[:3000]
+    edges = _load_edges(ref_1k)[:3000]
     df = _edges_df(spark, edges)
     n = max(max(u, v) for u, v in edges) + 1
     nodes = spark.range(0, n).select("id")
