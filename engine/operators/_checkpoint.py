@@ -5,6 +5,12 @@ localCheckpoint and rebuilds it with fresh Catalyst statistics: a plain
 localCheckpoint carries the size estimate forward, and a kernel that reads
 its previous round k times per round compounds it until planning stalls.
 
+`checkpoint_observed(df, P, key, observe)` materializes state that the next
+round reads once, and returns aggregates observed on its own job. With a
+`key` it writes the state hash-partitioned by that key into P partitions
+and the result scans that way, so a next round that joins on `key` against
+a table in the same partitioning plans no exchange for the state.
+
 `resume_point(checkpoint_dir, kernel, **identity)` is the one resume guard
 of the kernels that write iteration-stamped Parquet snapshots plus a JSON
 manifest through `snapshot_state` (pagerank, label propagation, CC, SCC),
@@ -19,7 +25,10 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+
+_AQE = "spark.sql.adaptive.enabled"
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 
 
 def partition_lineage(path: str) -> list[dict]:
@@ -71,6 +80,49 @@ def checkpoint(df: DataFrame, P: int, *keys: str) -> DataFrame:
         ),
         spark,
     )
+
+
+def checkpoint_observed(
+    df: DataFrame,
+    P: int,
+    key: str | None = None,
+    observe: tuple[Column, ...] = (),
+    columns: tuple[str, ...] | None = None,
+) -> tuple[DataFrame, dict]:
+    """Eager localCheckpoint of `df` (only `columns` when given) and the
+    aggregates `observe` over `df`, observed on the checkpoint job itself.
+
+    Without a `key` this is a plain localCheckpoint: under AQE it scans as
+    UnknownPartitioning(0) and carries the plan's size estimate forward.
+
+    With a `key` the frame is repartitioned to hashpartitioning(key, P), and
+    the job runs with spark.sql.adaptive.enabled=false and
+    spark.sql.shuffle.partitions=P (restored afterwards, also when the job
+    raises; the settings are session-wide, so a query planned concurrently
+    in another thread of the session sees them). Without AQE the
+    checkpoint records the final plan's partitioning, so the result scans
+    as hashpartitioning(key, P), and a child that already lands in that
+    partitioning (an aggregate by `key`) needs no exchange for the
+    repartition. The statistics are not reset: this serves state the next
+    round reads once, where the carried estimate does not compound."""
+    obs = Observation() if observe else None
+    if obs is not None:
+        df = df.observe(obs, *observe)
+    if columns:
+        df = df.select(*columns)
+    if key is None:
+        state = df.localCheckpoint(eager=True)
+    else:
+        conf = df.sparkSession.conf
+        saved = {k: conf.get(k) for k in (_AQE, _SHUFFLE_PARTITIONS)}
+        conf.set(_AQE, "false")
+        conf.set(_SHUFFLE_PARTITIONS, str(P))
+        try:
+            state = df.repartition(P, key).localCheckpoint(eager=True)
+        finally:
+            for k, v in saved.items():
+                conf.set(k, v)
+    return state, ({} if obs is None else obs.get)
 
 
 def resume_point(checkpoint_dir: str | None, kernel: str, **identity) -> dict | None:

@@ -15,10 +15,15 @@ Physical design (Spark-first, NOT a CSR port):
   precompute-1/outdeg-outside-the-loop, cu:122-129). It also holds one self
   row per node (w NULL, plus the node's dangling flag and teleport weight),
   so the gather's sum by dst also carries each node's old rank and flags.
-- the SpMV gather (cu:197-217) = adj ⋈ ranks on src, then sum by dst. With
-  `salt_buckets=S` the aggregation is an explicit two-stage skew split:
-  partial sums on (dst, pmod(hash(src),S)) then final sum on dst — hub
-  vertices with huge in-degree never serialize into one reducer.
+- the SpMV gather (cu:197-217) = adj ⋈ ranks on src, then sum by dst. The
+  broadcast gather partitions adj by dst and broadcasts r into it: a round
+  is one exchange-free stage. The shuffle gather partitions adj by src and
+  keeps r hash-partitioned by id in the same P partitions, so the join is a
+  sort-merge join that moves neither side and the only shuffle is the one
+  by dst: a round is one Spark job. With `salt_buckets=S` the aggregation
+  is an explicit two-stage skew split: partial sums on
+  (dst, pmod(hash(src),S)) then final sum on dst — hub vertices with huge
+  in-degree never serialize into one reducer.
 - dangling is a rank-1 scalar correction (cu:102,125: dangling rows never
   enter the matrix), NOT materialized edges.
 - convergence + next iteration's dangling mass + Σrank are observed
@@ -26,10 +31,12 @@ Physical design (Spark-first, NOT a CSR port):
   old rank beside the new one; the reference makes three separate sweeps
   (cu:149-174). The observed dangling mass enters the next update as a
   literal, so a round runs no aggregate job of its own.
-- lineage is truncated every `checkpoint_every` iterations: either
-  iteration-stamped Parquet snapshots + a JSON manifest with per-iteration
-  metrics (resumable: a rerun picks up from the last snapshot), or
-  localCheckpoint when no checkpoint_dir is given.
+- each round's r_new is materialized by an eager localCheckpoint (the
+  double-buffer swap, cu:175/307), which truncates the lineage every round.
+  With a checkpoint_dir, every `checkpoint_every`-th round and the last
+  also write an iteration-stamped Parquet snapshot + a JSON manifest with
+  per-iteration metrics (resumable: a rerun with the same graph, alpha,
+  weight column and teleport weights picks up from the last snapshot).
 """
 
 from __future__ import annotations
@@ -38,7 +45,7 @@ import json
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 @dataclass
@@ -76,14 +83,7 @@ def _dangling_mass():
     return F.sum(F.when(F.col("is_dangling"), F.col("rank")).otherwise(0.0)).alias("dm")
 
 
-def _checkpoint_observed(df: DataFrame, *aggs) -> tuple[DataFrame, dict]:
-    """localCheckpoint df's (id, rank) and return it with the aggregates
-    `aggs` over df, observed on the checkpoint job itself (no extra job)."""
-    obs = Observation()
-    state = df.observe(obs, *aggs).select("id", "rank").localCheckpoint(eager=True)
-    return state, obs.get
-
-
+from engine.operators._checkpoint import checkpoint_observed
 from engine.operators._checkpoint import read_snapshot as _read_snapshot
 from engine.operators._checkpoint import resume_point as _resume_point
 from engine.operators._checkpoint import snapshot_state as _snapshot_state
@@ -139,9 +139,12 @@ def pagerank(
     ONCE and the (small) rank vector is broadcast each iteration, so the
     join + partial agg + final agg all run in a single exchange-free stage
     over the cached adjacency — no per-iteration multi-MB shuffle at all.
-    False → shuffle gather (adj ⋈ ranks on src, shuffle by dst), the path
-    for node counts too big to broadcast; combine with salt_buckets for hub
-    skew. None (default) → auto: broadcast iff n ≤ BROADCAST_NODE_LIMIT.
+    False → shuffle gather, the path for node counts too big to broadcast:
+    adj is hash-partitioned on src and the rank vector is kept
+    hash-partitioned on id in the same partitions, so adj ⋈ ranks moves
+    neither side and a round is one Spark job with one shuffle (by dst);
+    combine with salt_buckets for hub skew (a second shuffle in the same
+    job). None (default) → auto: broadcast iff n ≤ BROADCAST_NODE_LIMIT.
     Both strategies compute the identical recurrence (float sum order may
     differ at the last ulp).
 
@@ -218,14 +221,17 @@ def pagerank(
         out_deg.select(F.col("src").alias("id"), "deg"), "id", "left"
     ).select("id", F.col("deg").isNull().alias("is_dangling"))
     if personalization is not None:
-        ptotal = personalization.agg(
-            F.sum(personalization.columns[1]).alias("t")
-        ).collect()[0]["t"]
+        pid, pweight = personalization.columns[:2]
+        # the digest identifies the teleport weights for the resume guard
+        ptotal, pdigest = personalization.agg(
+            F.sum(pweight).alias("t"),
+            F.sum(F.xxhash64(pid, pweight).cast("decimal(20,0)")).alias("digest"),
+        ).collect()[0]
         if not ptotal or ptotal <= 0:
             raise ValueError("personalization weights must sum to > 0")
         pw = personalization.select(
-            F.col(personalization.columns[0]).alias("id"),
-            (F.col(personalization.columns[1]) / F.lit(float(ptotal))).alias("pw"),
+            F.col(pid).alias("id"),
+            (F.col(pweight) / F.lit(float(ptotal))).alias("pw"),
         )
         # ids absent from the node universe would silently shrink the
         # effective teleport vector below 1 (masked only by the final
@@ -256,8 +262,8 @@ def pagerank(
     adj = (
         edge_rows.unionByName(self_rows, allowMissingColumns=True)
         # broadcast gather: partition by dst so join→partial-agg→final-agg is
-        # one exchange-free stage; shuffle gather: partition by src so only
-        # the small rank vector shuffles into the join
+        # one exchange-free stage; shuffle gather: partition by src, the
+        # partitioning r is kept in, so neither side shuffles into the join
         .repartition(P, "dst" if broadcast_ranks else "src")
         # one-time clustering by the per-iteration probe/join key, paid at
         # build and amortized over every iteration: broadcast path — rows
@@ -275,11 +281,25 @@ def pagerank(
     # ---- init / resume ----
     # r, the state, is (id, rank); the node attributes stay in node_info and
     # adj's self rows. Every materialization of r observes the dangling mass
-    # the next round needs, so no round runs an aggregate job for it.
+    # the next round needs, so no round runs an aggregate job for it. On the
+    # shuffle gather r is kept in adj's partitioning, hash(id, P), so the
+    # gather join reads both sides in place.
+    state_key = None if broadcast_ranks else "id"
+
+    def materialize(df, *aggs):
+        return checkpoint_observed(df, P, state_key, observe=aggs, columns=("id", "rank"))
+
     start_iter = 0
     metrics: list[dict] = []
     r = None
-    man = _resume_point(checkpoint_dir, "pagerank", n=n, m=num_edges, alpha=alpha)
+    identity = dict(
+        n=n,
+        m=num_edges,
+        alpha=alpha,
+        weight_col=weight_col,
+        personalization=None if personalization is None else str(pdigest),
+    )
+    man = _resume_point(checkpoint_dir, "pagerank", **identity)
     if man:
         start_iter = man["completed_iter"] + 1
         metrics = man["iterations"]
@@ -307,7 +327,7 @@ def pagerank(
     if r is None:
         init_rank = F.col("pw") if personalization is not None else F.lit(1.0 / n)
         r = node_info.select("id", init_rank.alias("rank"), "is_dangling")
-    r, seed_stats = _checkpoint_observed(r, _dangling_mass())
+    r, seed_stats = materialize(r, _dangling_mass())
     dm = seed_stats["dm"]
 
     converged = False
@@ -320,15 +340,20 @@ def pagerank(
     # convergence stats (L1 delta, next round's dangling mass, Σrank) are
     # observed on that same job; the reference makes three separate sweeps
     # (cu:149-174). The old rank and the node attributes come out of the
-    # same gather aggregate, from adj's self rows, so r is joined once: the
-    # broadcast gather costs two jobs per round (the rank broadcast and the
-    # checkpoint), the shuffle gather three (r to the gather join, the dst
-    # shuffle, the checkpoint; four when salted). Joining r a second time by
-    # id for the old rank would cost a third job on the broadcast gather:
-    # localCheckpoint output scans as UnknownPartitioning(0) (Spark 4.1.2),
-    # so r would be re-shuffled by id every round. It would also square r's
-    # Catalyst size estimate each round, which the checkpoint carries into
-    # the next round's plan, until planning stalls on BigInteger products.
+    # same gather aggregate, from adj's self rows, so r is joined once. The
+    # broadcast gather costs two jobs per round: the rank broadcast and the
+    # checkpoint. The shuffle gather costs one. Its checkpoint job runs
+    # without AQE and with P shuffle partitions (checkpoint_observed), so
+    # the gather aggregate already lands in hash(id, P), the checkpoint's
+    # repartition by id plans no exchange, and r scans as hash(id, P): adj's
+    # partitioning. The merge-hinted join then plans no exchange and no
+    # broadcast, and the dst shuffle (two when salted) runs inside the
+    # checkpoint job. A plain localCheckpoint scans as UnknownPartitioning(0)
+    # under AQE, and its small size estimate would plan a broadcast of r, a
+    # job of its own. Joining r a second time by id for the old rank would
+    # square r's Catalyst size estimate each round, which the checkpoint
+    # carries into the next round's plan, until planning stalls on
+    # BigInteger products.
     def combine(df, *keys):
         # each id group holds exactly one self row, so max() picks its values
         return df.groupBy(*keys).agg(
@@ -342,10 +367,12 @@ def pagerank(
         # dst-partitioned cached adjacency; the groupBy(dst) partial and
         # final aggregates are satisfied by adj's existing hash partitioning,
         # so the whole round is ONE stage, no shuffle files. Shuffle gather:
-        # r shuffles by src into the src-partitioned adjacency, then the
-        # contributions shuffle by dst.
+        # r and adj sit in the same hash partitioning, so the sort-merge
+        # join reads both in place and only the contributions shuffle, by
+        # dst.
         rows = adj.join(
-            F.broadcast(r) if broadcast_ranks else r, F.col("src") == F.col("id")
+            F.broadcast(r) if broadcast_ranks else r.hint("merge"),
+            F.col("src") == F.col("id"),
         ).select(
             "src",
             F.col("dst").alias("id"),
@@ -383,7 +410,7 @@ def pagerank(
         # bottleneck (driver-side, superlinear). localCheckpoint materializes
         # r_new to executor block storage and replaces the plan with a
         # LogicalRDD — the double-buffer swap of pagerank_gpu.cu:175/307.
-        r_new, stats = _checkpoint_observed(
+        r_new, stats = materialize(
             step,
             F.sum(F.abs(F.col("rank") - F.col("old"))).alias("delta"),
             _dangling_mass(),
@@ -422,16 +449,14 @@ def pagerank(
                 it,
                 {
                     "kernel": "pagerank",
-                    "n": n,
-                    "m": num_edges,
-                    "alpha": alpha,
+                    **identity,
                     "tol": tol,
                     "dangling_mass": dm,
                     "iterations": metrics,
                 },
             )
             # the reloaded ranks are bit-identical, so dm still holds
-            r = spark.read.parquet(snap).localCheckpoint(eager=True)
+            r, _ = materialize(spark.read.parquet(snap))
         if delta < tol:
             converged = True
             break

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import random
+import re
 
 import numpy as np
 import pytest
@@ -367,20 +368,40 @@ def test_hits_check_every_cadence(spark, ref_1k):
     assert all("wall_sec" in m for m in cadence.metrics)
 
 
-def _resume_guard_run(kernel, spark, edges, nodes, ck):
+def _resume_guard_run(kernel, spark, edges, nodes, ck, variant=""):
     """(engine result, oracle result) of one resumable kernel on `edges`
-    over the universe `nodes`, snapshotting every round into `ck`."""
+    over the universe `nodes`, snapshotting every round into `ck`. The
+    pagerank `variant` "personalized" teleports to three seeds, "weighted"
+    weighs each edge 1..5."""
     from engine.operators.pagerank import pagerank
     from engine.operators.scc import strongly_connected_components
-    from oracle import pagerank_numpy, scc_py
+    from oracle import (
+        pagerank_numpy,
+        pagerank_weighted_numpy,
+        personalized_pagerank_numpy,
+        scc_py,
+    )
 
     df, ndf = _edges_df(spark, edges), spark.range(len(nodes))
     if kernel == "pagerank":
-        res = pagerank(df, ndf, tol=0.0, max_iter=6, checkpoint_dir=ck, checkpoint_every=1)
-        got = [0.0] * len(nodes)
+        n, kw = len(nodes), dict(tol=0.0, max_iter=6)
+        if variant == "personalized":
+            pers = {3: 5.0, 10: 3.0, 42: 2.0}
+            pdf = spark.createDataFrame(list(pers.items()), "id long, weight double")
+            res = pagerank(df, ndf, personalization=pdf, checkpoint_dir=ck, checkpoint_every=1, **kw)
+            want = personalized_pagerank_numpy(edges, pers, n=n, **kw)[0]
+        elif variant == "weighted":
+            edges_w = [(u, v, float(1 + (7 * u + v) % 5)) for u, v in edges]
+            wdf = spark.createDataFrame(edges_w, "src long, dst long, wt double")
+            res = pagerank(wdf, ndf, weight_col="wt", checkpoint_dir=ck, checkpoint_every=1, **kw)
+            want = pagerank_weighted_numpy(edges_w, n=n, **kw)[0]
+        else:
+            res = pagerank(df, ndf, checkpoint_dir=ck, checkpoint_every=1, **kw)
+            want = pagerank_numpy(edges, n=n, **kw)[0]
+        got = [0.0] * n
         for r in res.ranks.collect():
             got[r.id] = r.rank
-        return got, list(pagerank_numpy(edges, n=len(nodes), tol=0.0, max_iter=6)[0])
+        return got, list(want)
     if kernel == "scc":
         out, want = strongly_connected_components(df, ndf, checkpoint_dir=ck), scc_py(edges, nodes)
     elif kernel == "lp":
@@ -392,17 +413,22 @@ def _resume_guard_run(kernel, spark, edges, nodes, ck):
     return {r.id: r.label for r in out.collect()}, want
 
 
-@pytest.mark.parametrize("kernel", ["cc", "lp", "pagerank", "scc"])
+@pytest.mark.parametrize(
+    "kernel", ["cc", "lp", "pagerank", "scc", "pagerank-personalized", "pagerank-weighted"]
+)
 def test_resume_refuses_different_edge_set(spark, tmp_path, kernel):
     """The manifest's input-identity guard: a checkpoint written for one edge
     set must not be resumed for another over the same node universe — the
-    second run restarts fresh and returns the SECOND graph's result."""
+    second run restarts fresh and returns the SECOND graph's result. Nor may
+    a uniform run's checkpoint be resumed by a personalized run on the same
+    edges, or an unweighted run's by a weighted one."""
+    kernel, _, variant = kernel.partition("-")
     nodes = list(range(150))
     g1 = _sparse_graph(n=120, m=150, seed=5)
     g2 = _sparse_graph(n=150, m=260, seed=6)
-    ck = str(tmp_path / f"{kernel}_guard_ck")
-    _resume_guard_run(kernel, spark, g1, nodes, ck)
-    got, want = _resume_guard_run(kernel, spark, g2, nodes, ck)
+    ck = str(tmp_path / f"{kernel}{variant}_guard_ck")
+    _resume_guard_run(kernel, spark, g2 if variant else g1, nodes, ck)
+    got, want = _resume_guard_run(kernel, spark, g2, nodes, ck, variant)
     if kernel == "pagerank":
         assert np.allclose(got, want, atol=1e-9)
     else:
@@ -429,6 +455,46 @@ def test_checkpoint_resets_statistics(spark):
     for ck in (checkpoint(df, 4, "id"), checkpoint(df, 4)):
         assert sorted(ck.collect()) == sorted(df.collect())
         assert size(ck) == default
+
+
+@pytest.mark.parametrize("key", ["id", None])
+def test_checkpoint_observed_rows_partitioning_and_stats(spark, key):
+    """checkpoint_observed returns the same rows (only `columns` when given)
+    and the aggregates observed on its own job, equal to a collect over the
+    input. With a key the result scans as hashpartitioning(key, P), which is
+    what lets the next round's join on the key skip its exchange."""
+    from engine.operators._checkpoint import checkpoint_observed
+
+    df = spark.range(0, 500).select(
+        (F.col("id") % 37).alias("id"), (F.col("id") * 0.5).alias("v"), F.lit(1).alias("x")
+    )
+    aggs = (F.sum("v").alias("s"), F.count(F.lit(1)).alias("c"), F.max("x").alias("mx"))
+    ck, stats = checkpoint_observed(df, 4, key, observe=aggs, columns=("id", "v"))
+    assert ck.columns == ["id", "v"]
+    assert sorted(ck.collect()) == sorted(df.select("id", "v").collect())
+    assert stats == df.agg(*aggs).collect()[0].asDict()
+    if key:
+        part = ck._jdf.queryExecution().executedPlan().outputPartitioning().toString()
+        assert re.fullmatch(r"hashpartitioning\(id#\d+L, 4\)", part), part
+    assert checkpoint_observed(df, 4, key)[1] == {}
+
+
+def test_checkpoint_observed_restores_session_conf(spark):
+    """The keyed checkpoint job runs without AQE and with P shuffle
+    partitions; both settings are back to the session's afterwards, after a
+    job that succeeds and after one that raises."""
+    from engine.operators._checkpoint import checkpoint_observed
+
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    before = {k: spark.conf.get(k) for k in keys}
+    checkpoint_observed(spark.range(50), 3, "id", observe=(F.count(F.lit(1)),))
+    assert {k: spark.conf.get(k) for k in keys} == before
+    bad = spark.range(50).select(
+        F.when(F.col("id") == 7, F.raise_error(F.lit("boom"))).otherwise(F.col("id")).alias("id")
+    )
+    with pytest.raises(Exception, match="boom"):
+        checkpoint_observed(bad, 3, "id")
+    assert {k: spark.conf.get(k) for k in keys} == before
 
 
 def test_bfs_deep_chain_visited_compaction(spark):

@@ -227,26 +227,74 @@ def test_personalized_resume_equals_uninterrupted(spark, tmp_path):
             assert abs(a[k] - b[k]) < 1e-12
 
 
-@pytest.mark.parametrize("broadcast_ranks", [True, False])
-def test_round_job_budget(spark, broadcast_ranks):
-    """A round is at most three Spark jobs (two on the broadcast gather): the
-    convergence stats ride on the checkpoint job instead of running their
-    own. Counted as the extra jobs of 4 extra rounds."""
+_GATHERS = {
+    "broadcast": dict(broadcast_ranks=True),
+    "shuffle": dict(broadcast_ranks=False),
+    "salted": dict(broadcast_ranks=False, salt_buckets=4),
+}
+
+
+@pytest.mark.parametrize(
+    "gather, round_jobs",
+    [("broadcast", 2), ("shuffle", 1), ("salted", 1)],
+    ids=["broadcast", "shuffle", "salted"],
+)
+def test_round_job_budget(spark, gather, round_jobs):
+    """A shuffle-gather round is one Spark job, salted or not: r is kept in
+    adj's partitioning, so the gather join reads it in place and the dst
+    shuffle runs inside the checkpoint job. A broadcast-gather round is two
+    (the rank broadcast and the checkpoint). The convergence stats ride on
+    the checkpoint job instead of running their own. Counted as the extra
+    jobs of 4 extra rounds."""
     sc = spark.sparkContext
     df = _edges_df(spark, _random_edges(5, n=30, m=90))
 
     def jobs(max_iter):
-        group = f"pagerank-budget-{broadcast_ranks}-{max_iter}"
+        group = f"pagerank-budget-{gather}-{max_iter}"
         sc.setJobGroup(group, group)
         try:
-            res = pagerank(df, tol=0.0, max_iter=max_iter, broadcast_ranks=broadcast_ranks)
+            res = pagerank(df, tol=0.0, max_iter=max_iter, **_GATHERS[gather])
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         for m in res.metrics:
             assert {"delta_l1", "dangling_mass", "sum_rank"} <= m.keys()
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    assert jobs(6) - jobs(2) <= 3 * 4
+    assert jobs(6) - jobs(2) <= round_jobs * 4
+
+
+def _plan_nodes(plan) -> list[str]:
+    """Operator names of an executed plan; a cached relation's own plan is
+    not a child, so it is not listed."""
+    out = [plan.nodeName()]
+    children = plan.children()
+    for i in range(children.size()):
+        out += _plan_nodes(children.apply(i))
+    return out
+
+
+@pytest.mark.parametrize("gather, exchanges", [("shuffle", 1), ("salted", 2)], ids=["shuffle", "salted"])
+def test_shuffle_gather_round_plan(spark, monkeypatch, gather, exchanges):
+    """A shuffle-gather round joins r to adj by sort-merge without moving
+    either side: no BroadcastExchange, and the only Exchange is the gather's
+    shuffle by dst (plus the salted partial aggregate's)."""
+    DF = type(spark.range(1))
+    local_checkpoint = DF.localCheckpoint
+    plans = []
+
+    def spy(self, *args, **kwargs):
+        out = local_checkpoint(self, *args, **kwargs)
+        plans.append(_plan_nodes(self._jdf.queryExecution().executedPlan()))
+        return out
+
+    monkeypatch.setattr(DF, "localCheckpoint", spy)
+    df = _edges_df(spark, _random_edges(5, n=30, m=90))
+    pagerank(df, tol=0.0, max_iter=3, **_GATHERS[gather])
+    rounds = [p for p in plans if "HashAggregate" in p]
+    assert len(rounds) == 3
+    for p in rounds:
+        assert "SortMergeJoin" in p and "BroadcastExchange" not in p
+        assert p.count("Exchange") == exchanges
 
 
 def test_shuffle_stats_unavailable_is_marked(spark, monkeypatch):
