@@ -195,7 +195,7 @@ def test_pipeline_job_host_ranks_artifact(tmp_path):
     assert abs(tot - 1.0) < 1e-9
 
 
-def test_bucketize_then_kernels_table_roundtrip(tmp_path, ref_1k):
+def test_bucketize_then_kernels_table_roundtrip(tmp_path):
     """Bucketize job writes the src-bucketed table; kernels_job reads it via
     --edges-table and runs the k-core/coreness kernels end-to-end — the
     ingest-once-shuffle-never-again workflow at job granularity."""
@@ -205,11 +205,11 @@ def test_bucketize_then_kernels_table_roundtrip(tmp_path, ref_1k):
     wh = tmp_path / "wh"
     out = tmp_path / "kern"
     env = dict(os.environ, PYSPARK_PYTHON=sys.executable)
-    # small deterministic edge parquet from the seeded 1k graph
+    # small deterministic edge parquet from the reference 1k graph
     import pandas as pd
 
     rows = []
-    for ln in Path(ref_1k).read_text().splitlines():
+    for ln in Path(REF_1K).read_text().splitlines():
         a, b = ln.split()[:2]
         rows.append((int(a), int(b)))
     import pyarrow as pa
@@ -337,7 +337,7 @@ def test_bucketize_then_kernels_table_roundtrip(tmp_path, ref_1k):
     assert len(meta2["louvain_levels"]) == 2
 
 
-def test_pagerank_job_warm_start_roundtrip(tmp_path, ref_1k):
+def test_pagerank_job_warm_start_roundtrip(tmp_path):
     # the incremental workflow end-to-end through the job CLI: run once,
     # feed {out}/ranks back via --init-ranks, expect the same topk report
     # and fewer (or equal) iterations in the second manifest
@@ -347,7 +347,7 @@ def test_pagerank_job_warm_start_roundtrip(tmp_path, ref_1k):
     out2 = tmp_path / "run2"
     base = [
         sys.executable, str(REPO / "jobs" / "pagerank_job.py"),
-        "--edges", ref_1k, "--format", "text",
+        "--edges", REF_1K, "--format", "text",
         "--tol", "1e-8", "--max-iter", "100",
         "--partitions", "8", "--master", "local[4]",
     ]
