@@ -24,11 +24,15 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 _AQE = "spark.sql.adaptive.enabled"
 _SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+# keyed checkpoints in several threads take turns: two that overlap would
+# each restore the settings the other one set
+_CONF_LOCK = threading.Lock()
 
 
 def partition_lineage(path: str) -> list[dict]:
@@ -98,8 +102,9 @@ def checkpoint_observed(
     With a `key` the frame is repartitioned to hashpartitioning(key, P), and
     the job runs with spark.sql.adaptive.enabled=false and
     spark.sql.shuffle.partitions=P (restored afterwards, also when the job
-    raises; the settings are session-wide, so a query planned concurrently
-    in another thread of the session sees them). Without AQE the
+    raises; keyed checkpoints in several threads take turns, but the
+    settings are session-wide, so another query planned concurrently in
+    the session sees them). Without AQE the
     checkpoint records the final plan's partitioning, so the result scans
     as hashpartitioning(key, P), and a child that already lands in that
     partitioning (an aggregate by `key`) needs no exchange for the
@@ -114,14 +119,15 @@ def checkpoint_observed(
         state = df.localCheckpoint(eager=True)
     else:
         conf = df.sparkSession.conf
-        saved = {k: conf.get(k) for k in (_AQE, _SHUFFLE_PARTITIONS)}
-        conf.set(_AQE, "false")
-        conf.set(_SHUFFLE_PARTITIONS, str(P))
-        try:
-            state = df.repartition(P, key).localCheckpoint(eager=True)
-        finally:
-            for k, v in saved.items():
-                conf.set(k, v)
+        with _CONF_LOCK:
+            saved = {k: conf.get(k) for k in (_AQE, _SHUFFLE_PARTITIONS)}
+            conf.set(_AQE, "false")
+            conf.set(_SHUFFLE_PARTITIONS, str(P))
+            try:
+                state = df.repartition(P, key).localCheckpoint(eager=True)
+            finally:
+                for k, v in saved.items():
+                    conf.set(k, v)
     return state, ({} if obs is None else obs.get)
 
 

@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from engine.operators._checkpoint import checkpoint_observed
+
 
 VISITED_RECHECKPOINT_EVERY = 50  # bound the visited-union plan depth
 
@@ -52,8 +54,10 @@ def bfs_levels(
             .join(visited.select("id"), "id", "left_anti")
             .withColumn("dist", F.lit(depth))
         )
-        nxt = nxt.localCheckpoint(eager=True)
-        if nxt.isEmpty():
+        # the level's row count is observed on its checkpoint job, so an
+        # empty level costs no second job
+        nxt, obs = checkpoint_observed(nxt, P, observe=(F.count(F.lit(1)).alias("rows"),))
+        if obs["rows"] == 0:
             break
         # no re-checkpoint of the union PER LEVEL: every level frame is
         # already an eager checkpoint, so the union is a shallow tree of

@@ -30,6 +30,24 @@ class HitsResult:
     metrics: list[dict] = field(default_factory=list)
 
 
+def l1_delta(*pairs: tuple[DataFrame, DataFrame]) -> float:
+    """Σ over (new, old) pairs of Σ_id |new.s − old.s|, for (id, s) frames
+    over the same ids. New and negated old scores meet in one aggregate by
+    (id, pair): one shuffle, where joining the frames re-shuffled each of
+    them. A two-row sum is exact, so each |Δ| equals |new − old|."""
+    signed = [
+        frame.select("id", F.lit(k).alias("k"), (sign * F.col("s")).alias("s"))
+        for k, (new, old) in enumerate(pairs)
+        for frame, sign in ((new, 1.0), (old, -1.0))
+    ]
+    u = signed[0]
+    for frame in signed[1:]:
+        u = u.unionByName(frame)
+    return float(
+        u.groupBy("id", "k").agg(F.abs(F.sum("s")).alias("d")).agg(F.sum("d")).collect()[0][0]
+    )
+
+
 def hits(
     edges: DataFrame,
     max_iter: int = 50,
@@ -53,15 +71,17 @@ def hits(
     Both strategies compute the identical recurrence (float sum order may
     differ at the last ulp).
 
-    check_every: cadence of the convergence-stats job (the 4-way delta join +
+    check_every: cadence of the convergence-stats job (the delta aggregate +
     driver collect) — the recurrence itself
     never needs it, so with k > 1 the non-check iterations run without any
     driver round-trip beyond the half-step norms, at the cost of up to k-1
     iterations past convergence. Metrics carry delta_l1 only on check
     iterations.
     """
+    import math
     import time
 
+    from engine.operators._checkpoint import checkpoint_observed
     from engine.operators.pagerank import BROADCAST_NODE_LIMIT
 
     spark = edges.sparkSession
@@ -112,10 +132,14 @@ def hits(
         out = nodes.join(raw.withColumnRenamed(key_out, "id"), "id", "left").select(
             "id", F.coalesce("raw", F.lit(0.0)).alias("raw")
         )
-        norm = out.agg(F.sqrt(F.sum(F.col("raw") * F.col("raw"))).alias("nz"))
-        return out.crossJoin(F.broadcast(norm)).select(
-            "id",
-            F.when(F.col("nz") > 0, F.col("raw") / F.col("nz")).otherwise(0.0).alias("s"),
+        # the norm is observed on the checkpoint job itself, so normalizing
+        # is a projection over the checkpoint, not a second pass over `out`
+        state, obs = checkpoint_observed(
+            out, P, observe=(F.sum(F.col("raw") * F.col("raw")).alias("ss"),)
+        )
+        nz = math.sqrt(obs["ss"])
+        return state.select(
+            "id", (F.col("raw") / F.lit(nz) if nz > 0 else F.lit(0.0)).alias("s")
         )
 
     converged = False
@@ -124,24 +148,11 @@ def hits(
     it = -1
     for it in range(max_iter):
         t0 = time.time()
-        a_new = _half_step(h, "src", "dst").localCheckpoint(eager=True)
-        h_new = _half_step(a_new, "dst", "src").localCheckpoint(eager=True)
+        a_new = _half_step(h, "src", "dst")
+        h_new = _half_step(a_new, "dst", "src")
         m = {"iter": it}
         if (it + 1) % check_every == 0 or it == max_iter - 1:
-            stats = (
-                h_new.withColumnRenamed("s", "hn")
-                .join(h.withColumnRenamed("s", "ho"), "id")
-                .join(a_new.withColumnRenamed("s", "an"), "id")
-                .join(a.withColumnRenamed("s", "ao"), "id")
-                .agg(
-                    (
-                        F.sum(F.abs(F.col("hn") - F.col("ho")))
-                        + F.sum(F.abs(F.col("an") - F.col("ao")))
-                    ).alias("delta")
-                )
-                .collect()[0]
-            )
-            delta = float(stats["delta"])
+            delta = l1_delta((h_new, h), (a_new, a))
             m["delta_l1"] = delta
         m["wall_sec"] = round(time.time() - t0, 4)
         metrics.append(m)

@@ -72,6 +72,7 @@ def salsa(
     """
     import time
 
+    from engine.operators.hits import l1_delta
     from engine.operators.pagerank import BROADCAST_NODE_LIMIT
 
     spark = edges.sparkSession
@@ -158,18 +159,7 @@ def salsa(
         h_new = _gather(t_auth, "dst", "src", "inv_in", hubs).localCheckpoint(eager=True)
         m = {"iter": it}
         if (it + 1) % check_every == 0 or it == max_iter - 1:
-            stats = (
-                h_new.withColumnRenamed("s", "hn")
-                .join(h.withColumnRenamed("s", "ho"), "id")
-                .agg(F.sum(F.abs(F.col("hn") - F.col("ho"))).alias("dh"))
-                .crossJoin(
-                    a_new.withColumnRenamed("s", "an")
-                    .join(a.withColumnRenamed("s", "ao"), "id")
-                    .agg(F.sum(F.abs(F.col("an") - F.col("ao"))).alias("da"))
-                )
-                .collect()[0]
-            )
-            delta = float(stats["dh"]) + float(stats["da"])
+            delta = l1_delta((h_new, h), (a_new, a))
             m["delta_l1"] = delta
         m["wall_sec"] = round(time.time() - t0, 4)
         metrics.append(m)

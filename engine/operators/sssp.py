@@ -22,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from engine.operators._checkpoint import checkpoint_observed
+
 
 def sssp(
     edges: DataFrame,
@@ -65,13 +67,14 @@ def sssp(
             .agg(F.min(F.col("dist") + F.col("_w")).alias("cand"))
         )
         # improved = candidates strictly better than the settled distance
-        improved = (
+        improved, obs = checkpoint_observed(
             cand.join(dist.withColumnRenamed("dist", "old"), "id", "left")
             .filter(F.col("old").isNull() | (F.col("cand") < F.col("old")))
-            .select("id", F.col("cand").alias("dist"))
-            .localCheckpoint(eager=True)
+            .select("id", F.col("cand").alias("dist")),
+            P,
+            observe=(F.count(F.lit(1)).alias("rows"),),
         )
-        if improved.isEmpty():
+        if obs["rows"] == 0:
             break
         # merge: improved rows replace, everything else carries over. One
         # materialization per round (anti-join + union of two checkpointed

@@ -78,13 +78,22 @@ def test_all_registered_oracles_type_match_spark_schema(spark):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
+    from concurrent.futures import ThreadPoolExecutor
+
     from engine.operators._pins import pin_scope
 
+    def spark_types(name):
+        with pin_scope():
+            return dict(qs[name](spark, sf_dir).dtypes)
+
+    # iterative queries run their rounds while the DataFrame is built, and a
+    # round is mostly driver-side latency: the queries are independent, so
+    # they build in a few threads of the one session (pins are per thread)
+    with ThreadPoolExecutor(4) as ex:
+        types = dict(zip(oracles, ex.map(spark_types, oracles)))
     drifts = {}
     for name, sql in oracles.items():
-        with pin_scope():
-            sdf = qs[name](spark, sf_dir)
-            tm = type_mismatches(dict(sdf.dtypes), oracle_types(con, sql))
+        tm = type_mismatches(types[name], oracle_types(con, sql))
         if tm:
             drifts[name] = tm
     assert drifts == {}

@@ -28,6 +28,16 @@ def _edges_df(spark, edges):
     return spark.createDataFrame(edges, schema="src long, dst long")
 
 
+def _concurrently(*calls):
+    """Results of independent kernel calls, each run in its own thread of
+    the one session: a kernel round is mostly driver-side latency, so the
+    calls overlap."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(len(calls)) as ex:
+        return [f.result() for f in [ex.submit(call) for call in calls]]
+
+
 def _sparse_graph(n=400, m=500, seed=7):
     rng = random.Random(seed)
     edges = []
@@ -335,9 +345,11 @@ def test_hits_broadcast_and_shuffle_gather_agree(spark, ref_1k):
 
     edges = _load_edges(ref_1k, limit=2000)
     df = _edges_df(spark, edges)
-    bc = hits(df, tol=1e-12, max_iter=25, broadcast_scores=True)
-    sh = hits(df, tol=1e-12, max_iter=25, broadcast_scores=False)
-    salted = hits(df, tol=1e-12, max_iter=25, broadcast_scores=False, salt_buckets=8)
+    bc, sh, salted = _concurrently(
+        lambda: hits(df, tol=1e-12, max_iter=25, broadcast_scores=True),
+        lambda: hits(df, tol=1e-12, max_iter=25, broadcast_scores=False),
+        lambda: hits(df, tol=1e-12, max_iter=25, broadcast_scores=False, salt_buckets=8),
+    )
     assert bc.iterations == sh.iterations == salted.iterations
     b = {r.id: (r.hub, r.authority) for r in bc.scores.collect()}
     s = {r.id: (r.hub, r.authority) for r in sh.scores.collect()}
@@ -356,8 +368,10 @@ def test_hits_check_every_cadence(spark, ref_1k):
 
     edges = _load_edges(ref_1k, limit=2000)
     df = _edges_df(spark, edges)
-    every = hits(df, tol=1e-12, max_iter=12, check_every=1)
-    cadence = hits(df, tol=1e-12, max_iter=12, check_every=4)
+    every, cadence = _concurrently(
+        lambda: hits(df, tol=1e-12, max_iter=12, check_every=1),
+        lambda: hits(df, tol=1e-12, max_iter=12, check_every=4),
+    )
     assert every.iterations == cadence.iterations == 12
     e = {r.id: (r.hub, r.authority) for r in every.scores.collect()}
     c = {r.id: (r.hub, r.authority) for r in cadence.scores.collect()}
@@ -494,6 +508,29 @@ def test_checkpoint_observed_restores_session_conf(spark):
     )
     with pytest.raises(Exception, match="boom"):
         checkpoint_observed(bad, 3, "id")
+    assert {k: spark.conf.get(k) for k in keys} == before
+
+
+def test_checkpoint_observed_concurrent_threads_restore_conf(spark):
+    """Keyed checkpoints from several threads of one session take turns, so
+    none restores a setting another one changed: the session's settings
+    are intact afterwards and every thread got its own rows and counts."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from engine.operators._checkpoint import checkpoint_observed
+
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    before = {k: spark.conf.get(k) for k in keys}
+
+    def run(i):
+        frame, obs = checkpoint_observed(
+            spark.range(10 * (i + 1)), 2 + i, "id", observe=(F.count(F.lit(1)).alias("n"),)
+        )
+        return obs["n"], frame.count(), frame.rdd.getNumPartitions()
+
+    with ThreadPoolExecutor(4) as ex:
+        got = list(ex.map(run, range(8)))
+    assert got == [(10 * (i + 1), 10 * (i + 1), 2 + i) for i in range(8)]
     assert {k: spark.conf.get(k) for k in keys} == before
 
 
@@ -2195,9 +2232,11 @@ def test_salsa_broadcast_and_shuffle_gather_agree(spark, ref_1k):
 
     edges = _load_edges(ref_1k, limit=2000)
     df = _edges_df(spark, edges)
-    bc = salsa(df, tol=1e-12, max_iter=15, broadcast_scores=True)
-    sh = salsa(df, tol=1e-12, max_iter=15, broadcast_scores=False)
-    salted = salsa(df, tol=1e-12, max_iter=15, broadcast_scores=False, salt_buckets=8)
+    bc, sh, salted = _concurrently(
+        lambda: salsa(df, tol=1e-12, max_iter=15, broadcast_scores=True),
+        lambda: salsa(df, tol=1e-12, max_iter=15, broadcast_scores=False),
+        lambda: salsa(df, tol=1e-12, max_iter=15, broadcast_scores=False, salt_buckets=8),
+    )
     assert bc.iterations == sh.iterations == salted.iterations
     b = {r.id: (r.hub, r.authority) for r in bc.scores.collect()}
     s = {r.id: (r.hub, r.authority) for r in sh.scores.collect()}

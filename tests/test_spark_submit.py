@@ -88,23 +88,53 @@ def test_spark_submit_pyfiles_golden_1k(tmp_path):
     assert metrics["metrics"][-1]["delta_l1"] < 1e-8
 
 
-def test_pipeline_job_near_dedupe_manifest(tmp_path):
-    """VERDICT r3 #7: the flagship pipeline surfaces the LSH cap drop
-    counts in its manifest (no silent caps in the job, not just the
-    library)."""
-    out = tmp_path / "pipe"
+@pytest.fixture(scope="module")
+def pipeline_run(spark, tmp_path_factory):
+    """(out dir, process) of ONE pipeline_job.py run with every optional
+    stage on; each pipeline test below asserts on its own stage's artifacts
+    and manifest entries. The decontamination benchmark is a verbatim slice
+    of the same corpus — the realistic leakage case (benchmark text copied
+    into the crawl), so contamination is guaranteed by construction. Pages
+    are deterministic per (seed, id), so the slice is written from the test
+    session and matches the job's own generation."""
+    from pyspark.sql import functions as F
+
+    from engine import datagen
+    from engine.operators import graph
+
+    base = tmp_path_factory.mktemp("pipeline")
+    bench_dir, out = base / "bench", base / "pipe"
+    pages = datagen.generate_pages_df(spark, 300, seed=42, partitions=2)
+    bench = graph.extract_pages(pages).where(F.crc32(F.col("url")) % 7 == 0)
+    bench.select("text").write.mode("overwrite").parquet(str(bench_dir))
     env = dict(os.environ, PYSPARK_PYTHON=sys.executable)
     proc = subprocess.run(
         [
             sys.executable, str(REPO / "jobs" / "pipeline_job.py"),
             "--gen-pages", "300", "--out", str(out),
             "--near-dedupe", "--dedupe-max-bucket", "50",
+            "--quality-filter", "--scrub-pii",
+            "--decontaminate", str(bench_dir),
+            "--host-ranks",
             "--master", "local[8]", "--partitions", "8",
         ],
-        capture_output=True, text=True, timeout=600, env=env,
+        capture_output=True, text=True, timeout=900, env=env,
     )
+    return out, proc
+
+
+def _pipeline_summary(pipeline_run) -> dict:
+    out, proc = pipeline_run
     assert proc.returncode == 0, proc.stderr[-4000:]
-    summary = json.loads((out / "summary.json").read_text())
+    return json.loads((out / "summary.json").read_text())
+
+
+def test_pipeline_job_near_dedupe_manifest(pipeline_run):
+    """VERDICT r3 #7: the flagship pipeline surfaces the LSH cap drop
+    counts in its manifest (no silent caps in the job, not just the
+    library)."""
+    out = pipeline_run[0]
+    summary = _pipeline_summary(pipeline_run)
     dm = summary["dedupe_metrics"]
     for key in (
         "minhash_buckets_total", "minhash_buckets_dropped",
@@ -117,40 +147,12 @@ def test_pipeline_job_near_dedupe_manifest(tmp_path):
     assert (out / "pages_dedup").exists()
 
 
-def test_pipeline_job_quality_and_decontamination(tmp_path):
-    """--quality-filter and --decontaminate write their artifacts and put
-    attributable counts in the manifest (no silent drops in the flagship
-    job). The benchmark is a verbatim slice of the same corpus — the
-    realistic leakage case (benchmark text copied into the crawl), so
-    contamination is guaranteed by construction."""
-    out = tmp_path / "pipe"
-    bench_dir = tmp_path / "bench"
-    env = dict(os.environ, PYSPARK_PYTHON=sys.executable)
-    gen = subprocess.run(
-        [
-            sys.executable, "-c",
-            "from engine.session import build_session; from engine import datagen; "
-            "from engine.operators import graph; from pyspark.sql import functions as F; "
-            "s = build_session(master='local[4]', shuffle_partitions=4); "
-            "p = datagen.generate_pages_df(s, 300, seed=42, partitions=2); "
-            "b = graph.extract_pages(p).where(F.crc32(F.col('url')) % 7 == 0); "
-            f"b.select('text').write.mode('overwrite').parquet(r'{bench_dir}')",
-        ],
-        capture_output=True, text=True, timeout=300, env=env, cwd=str(REPO),
-    )
-    assert gen.returncode == 0, gen.stderr[-4000:]
-    proc = subprocess.run(
-        [
-            sys.executable, str(REPO / "jobs" / "pipeline_job.py"),
-            "--gen-pages", "300", "--out", str(out),
-            "--quality-filter", "--scrub-pii",
-            "--decontaminate", str(bench_dir),
-            "--master", "local[8]", "--partitions", "8",
-        ],
-        capture_output=True, text=True, timeout=600, env=env,
-    )
-    assert proc.returncode == 0, proc.stderr[-4000:]
-    summary = json.loads((out / "summary.json").read_text())
+def test_pipeline_job_quality_and_decontamination(pipeline_run):
+    """--quality-filter, --scrub-pii and --decontaminate write their
+    artifacts and put attributable counts in the manifest (no silent drops
+    in the flagship job)."""
+    out = pipeline_run[0]
+    summary = _pipeline_summary(pipeline_run)
     qf = summary["quality_filter"]
     assert qf["kept"] + qf["dropped"] > 0
     assert sum(qf["drop_reasons"].values()) == qf["dropped"]
@@ -170,21 +172,11 @@ def test_pipeline_job_quality_and_decontamination(tmp_path):
     assert kept_rows == qf["kept"]
 
 
-def test_pipeline_job_host_ranks_artifact(tmp_path):
+def test_pipeline_job_host_ranks_artifact(pipeline_run):
     """--host-ranks writes the Common Crawl-style host-graph artifact:
     rollup → weighted PageRank, Σ rank = 1 over the hosts."""
-    out = tmp_path / "pipe"
-    env = dict(os.environ, PYSPARK_PYTHON=sys.executable)
-    proc = subprocess.run(
-        [
-            sys.executable, str(REPO / "jobs" / "pipeline_job.py"),
-            "--gen-pages", "300", "--out", str(out),
-            "--host-ranks", "--master", "local[8]", "--partitions", "8",
-        ],
-        capture_output=True, text=True, timeout=600, env=env,
-    )
-    assert proc.returncode == 0, proc.stderr[-4000:]
-    summary = json.loads((out / "summary.json").read_text())
+    out = pipeline_run[0]
+    summary = _pipeline_summary(pipeline_run)
     assert summary["host_ranks"]["hosts"] > 0
     import duckdb
 
@@ -380,25 +372,20 @@ def test_pagerank_job_warm_start_roundtrip(tmp_path):
     assert m1["iterations"] > m2["iterations"]
 
 
-def test_corpus_hygiene_job_end_to_end(tmp_path):
+def test_corpus_hygiene_job_end_to_end(spark, tmp_path):
     """The training-corpus hygiene chain: every stage's drop is counted in
     the manifest, the boilerplate block collapses in exact dedupe, the
     verbatim-slice benchmark decontaminates, and split+packing cover every
     surviving doc exactly once."""
+    from engine import datagen
+
     out = tmp_path / "corpus"
     bench_dir = tmp_path / "bench"
     env = dict(os.environ, PYSPARK_PYTHON=sys.executable)
-    gen = subprocess.run(
-        [
-            sys.executable, "-c",
-            "from engine.session import build_session; from engine import datagen; "
-            "s = build_session(master='local[4]', shuffle_partitions=4); "
-            "d = datagen.generate_boilerplate_docs(s, 1000, 100, seed=42); "
-            f"d.where('doc_id % 11 = 3').select('text').write.mode('overwrite').parquet(r'{bench_dir}')",
-        ],
-        capture_output=True, text=True, timeout=300, env=env, cwd=str(REPO),
-    )
-    assert gen.returncode == 0, gen.stderr[-4000:]
+    # docs are deterministic per (seed, doc_id), so the test session writes
+    # the same slice the job generates
+    docs = datagen.generate_boilerplate_docs(spark, 1000, 100, seed=42)
+    docs.where("doc_id % 11 = 3").select("text").write.mode("overwrite").parquet(str(bench_dir))
     proc = subprocess.run(
         [
             sys.executable, str(REPO / "jobs" / "corpus_job.py"),
@@ -447,7 +434,7 @@ def test_corpus_hygiene_job_end_to_end(tmp_path):
     assert chunks == m["packed_chunks"]
 
 
-def test_corpus_job_line_dedupe_stage(tmp_path):
+def test_corpus_job_line_dedupe_stage(spark, tmp_path):
     """--line-dedupe drops every repeated line corpus-wide (keep the min
     (doc,pos) occurrence), counts lines and emptied docs in the manifest,
     and feeds the cleaned text into the doc-level stages."""
@@ -461,17 +448,9 @@ def test_corpus_job_line_dedupe_stage(tmp_path):
         (4, "unique gamma line"),
         (5, "unique delta line\nunique delta line"),  # within-doc dup
     ]
-    gen = subprocess.run(
-        [
-            sys.executable, "-c",
-            "from engine.session import build_session; "
-            "s = build_session(master='local[4]', shuffle_partitions=4); "
-            f"s.createDataFrame({rows!r}, 'doc_id long, text string')"
-            f".write.mode('overwrite').parquet(r'{docs_dir}')",
-        ],
-        capture_output=True, text=True, timeout=300, env=env, cwd=str(REPO),
-    )
-    assert gen.returncode == 0, gen.stderr[-4000:]
+    spark.createDataFrame(rows, "doc_id long, text string").write.mode(
+        "overwrite"
+    ).parquet(str(docs_dir))
     proc = subprocess.run(
         [
             sys.executable, str(REPO / "jobs" / "corpus_job.py"),
